@@ -1,15 +1,16 @@
 """In-process layer probes for the traced run (no Spark involved).
 
 ``kernel_phases`` calls the kernel's public functions in pipeline order
-on one document at a time; ``udfs_batches`` feeds the same documents to
-``kg_process_batches()`` as Arrow RecordBatches, so the difference is
+on one document at a time; ``udfs_batch_us`` feeds the same documents to
+``kg_process_batches()`` as one Arrow RecordBatch, so the difference is
 the cost of the batch boundary: result tuples, triple prefixing and
-Arrow column building.
+Arrow column building.  ``kernel_and_batch`` times both on one sample.
 """
 
 from __future__ import annotations
 
 import hashlib
+import statistics
 import time
 from collections import Counter
 
@@ -70,26 +71,52 @@ def _tick(spent: dict, phase: str, t: float, clock) -> float:
     return now
 
 
-def udfs_batches(docs: list[str], batch_rows: int = 128) -> float:
-    """Mean µs per document through ``kg_process_batches()``."""
+def udfs_batch_us(docs: list[str]) -> float:
+    """Mean µs per document through ``kg_process_batches()``, fed the
+    documents as one batch: a kernel task gets its partition's distinct
+    documents in one batch, since a partition holds fewer rows than the
+    pipeline's 64k-row Arrow batch limit."""
     import pyarrow as pa
 
     from cbor_ld_spark.functions.udfs import kg_process_batches
 
-    batches = [
-        pa.RecordBatch.from_pydict({
-            "content_sha": [hashlib.sha256(c.encode()).hexdigest()
-                            for c in docs[i:i + batch_rows]],
-            "content": docs[i:i + batch_rows]})
-        for i in range(0, len(docs), batch_rows)]
+    batch = pa.RecordBatch.from_pydict({
+        "content_sha": [hashlib.sha256(c.encode()).hexdigest() for c in docs],
+        "content": docs})
     fn = kg_process_batches()
     t = time.perf_counter()
-    rows = sum(b.num_rows for b in fn(iter(batches)))
+    rows = sum(b.num_rows for b in fn(iter([batch])))
     spent = time.perf_counter() - t
     if rows != len(docs):
         raise RuntimeError(f"kg_process_batches returned {rows} rows "
                            f"for {len(docs)} documents")
     return spent / max(1, len(docs)) * 1e6
+
+
+def kernel_and_batch(docs: list[str], passes: int
+                     ) -> tuple[dict[str, float], Counter, float, float]:
+    """Kernel phases and the batch path on the same documents.
+
+    One untimed pass fills the kernel's context and value caches; then
+    ``passes`` passes time both probes, alternating which goes first.
+    Returns the median µs per document of each phase, the error kinds of
+    one pass, the median batch µs per document, and the median over
+    passes of batch minus the sum of the phases (the boundary)."""
+    kernel_phases(docs)
+    phase_runs, batch_runs = [], []
+    for i in range(passes):
+        for probe in ("phases", "batch") if i % 2 == 0 else ("batch",
+                                                             "phases"):
+            if probe == "phases":
+                phase_runs.append(kernel_phases(docs))
+            else:
+                batch_runs.append(udfs_batch_us(docs))
+    phases = {p: statistics.median(r[0][p] for r in phase_runs)
+              for p in PHASES}
+    boundary = statistics.median(
+        b - sum(r[0].values()) for r, b in zip(phase_runs, batch_runs))
+    return (phases, phase_runs[0][1], statistics.median(batch_runs),
+            boundary)
 
 
 def sparql_parse_us(texts: list[str], reps: int) -> float:
@@ -100,26 +127,3 @@ def sparql_parse_us(texts: list[str], reps: int) -> float:
         for q in texts:
             parse_sparql(q)
     return (time.perf_counter() - t) / max(1, reps * len(texts)) * 1e6
-
-
-def kcore_rounds(edges: list[tuple[str, str]]) -> int:
-    """Rounds the h-index iteration of ``k_core_decomposition`` runs on
-    this edge set, counting the final round that changes nothing."""
-    nbrs: dict[str, set] = {}
-    for a, b in edges:
-        if a != b:
-            nbrs.setdefault(a, set()).add(b)
-            nbrs.setdefault(b, set()).add(a)
-    core = {v: len(n) for v, n in nbrs.items()}
-    rounds = 0
-    while True:
-        rounds += 1
-        new = {}
-        for v, ns in nbrs.items():
-            vals = sorted((core[u] for u in ns), reverse=True)
-            h = max((min(val, i + 1) for i, val in enumerate(vals)),
-                    default=0)
-            new[v] = min(core[v], h)
-        if new == core:
-            return rounds
-        core = new

@@ -129,6 +129,8 @@ class EventLog:
 
     def __init__(self, log_dir: str):
         self.group_stages: dict[str, set] = {}
+        self.group_executions: dict[str, set] = {}
+        self.execution_calls: dict[tuple, str] = {}
         self.stage_scopes: dict[tuple, set] = {}
         self.tasks: dict[tuple, list[dict]] = {}
         for path in sorted(glob.glob(os.path.join(log_dir, "*"))):
@@ -145,6 +147,16 @@ class EventLog:
                     if group:
                         self.group_stages.setdefault(group, set()).update(
                             (path, sid) for sid in ev["Stage IDs"])
+                        execution = ev["Properties"].get(
+                            "spark.sql.execution.id")
+                        if execution is not None:
+                            self.group_executions.setdefault(
+                                group, set()).add((path, int(execution)))
+                elif kind.endswith("SQLExecutionStart"):
+                    # the first line of the details is the Dataset method
+                    # that ran the query, e.g. ``...Dataset.count(...)``
+                    self.execution_calls[(path, ev["executionId"])] = (
+                        ev.get("details") or "").split("\n", 1)[0]
                 elif kind == "SparkListenerTaskEnd":
                     m = ev.get("Task Metrics") or {}
                     self.tasks.setdefault((path, ev["Stage ID"]), []).append({
@@ -165,6 +177,11 @@ class EventLog:
         for g in groups:
             out |= self.group_stages.get(g, set())
         return out
+
+    def actions(self, group: str, method: str) -> int:
+        """Number of queries of one job group run by ``Dataset.<method>``."""
+        return sum(1 for key in self.group_executions.get(group, ())
+                   if f"Dataset.{method}(" in self.execution_calls.get(key, ""))
 
     def shuffle_bytes(self, groups: list[str]) -> int:
         return sum(t["shuffle_write"] for key in self.stages_of(groups)
