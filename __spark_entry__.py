@@ -349,13 +349,10 @@ def _kg_degree_distribution(spark, sf_dir):
     audit (mega-entities show up as the heavy-degree tail that the
     linking/pagerank stages must absorb).  Two hash aggregations on
     uniform keys."""
+    from cbor_ld_spark.operators.graph import undirected_edges
     from cbor_ld_spark.plans import shared_entity_edges
 
-    e = (shared_entity_edges(spark, sf_dir)
-         .filter(F.col("src") != F.col("dst")))
-    und = (e.select(F.least("src", "dst").alias("a"),
-                    F.greatest("src", "dst").alias("b"))
-           .distinct())
+    und = undirected_edges(shared_entity_edges(spark, sf_dir))
     degrees = (und.select(F.col("a").alias("node"))
                .unionByName(und.select(F.col("b").alias("node")))
                .groupBy("node")
@@ -1167,6 +1164,21 @@ def _kg_path_closure(spark, sf_dir):
     return out.orderBy("src", "dst")
 
 
+def _exact_bfs_layers(edges, k: int):
+    """(node count, {hop: pairs first reached at that hop}) over every
+    root — the exact companion the HyperANF queries check their
+    sketches against: one batched k_hop BFS dataflow for ALL roots,
+    reduced to k tiny layer counts (bounded collects)."""
+    from cbor_ld_spark.operators.graph import graph_nodes, k_hop
+
+    nodes = graph_nodes(edges)
+    n = nodes.count()
+    reach = k_hop(edges, nodes, k=k)
+    return n, {r["first_hop"]: r["n"]
+               for r in reach.groupBy("first_hop")
+               .agg(F.count(F.lit(1)).alias("n")).collect()}
+
+
 def _kg_anf(spark, sf_dir, k: int = 4):
     """Approximate neighborhood function (HyperANF-style): per-node
     HLL reachability sketches unioned per hop — the only way to ask
@@ -1175,25 +1187,12 @@ def _kg_anf(spark, sf_dir, k: int = 4):
     verification: the batched k_hop BFS computes the exact companion
     and the row carries the tolerance bool (same pattern as
     kg_cardinality_sketch); the oracle replays the exact BFS."""
-    from cbor_ld_spark.operators.graph import (
-        approx_neighborhood_function,
-        k_hop,
-    )
+    from cbor_ld_spark.operators.graph import approx_neighborhood_function
     from cbor_ld_spark.plans import shared_entity_edges
 
     edges = shared_entity_edges(spark, sf_dir)  # already checkpointed
     est = approx_neighborhood_function(edges, k=k)
-    nodes = (edges.select(F.col("src").alias("node"))
-             .unionByName(edges.select(F.col("dst").alias("node")))
-             .distinct()
-             .localCheckpoint())
-    n = nodes.count()
-    # exact companion: one batched BFS dataflow for ALL roots (k_hop
-    # seeds batch), reduced to k tiny layer counts — bounded collects
-    reach = k_hop(edges, nodes, k=k)
-    layer = {r["first_hop"]: r["n"]
-             for r in reach.groupBy("first_hop")
-             .agg(F.count(F.lit(1)).alias("n")).collect()}
+    n, layer = _exact_bfs_layers(edges, k)
     est_map = {r["hop"]: r["est_pairs"] for r in est.collect()}
     rows, cum = [], n
     for h in range(k + 1):
@@ -1211,28 +1210,20 @@ def _kg_anf(spark, sf_dir, k: int = 4):
 def _kg_anf_diameter(spark, sf_dir):
     """Effective diameter (90th-percentile hop distance) from the
     HyperANF curve run to SATURATION (operators/graph.py
-    effective_diameter) — the r6-verdict-suggested derivation that
-    turns the ANF primitive into the statistic users actually quote.
+    effective_diameter) — the derivation that turns the ANF
+    primitive into the statistic users actually quote.
     Gate-scale verification (tolerance-bool pattern): the batched
     k_hop BFS computes the exact curve, the row carries the exact
     effective diameter + saturation hop and a bool pinning the sketch
     answer within one hop; the oracle replays the exact BFS."""
-    from cbor_ld_spark.operators.graph import effective_diameter, k_hop
+    from cbor_ld_spark.operators.graph import effective_diameter
     from cbor_ld_spark.plans import shared_entity_edges
 
     edges = shared_entity_edges(spark, sf_dir)
     est_eff, est_sat, _curve = effective_diameter(
         edges, alpha=0.9, max_hops=24)
-    nodes = (edges.select(F.col("src").alias("node"))
-             .unionByName(edges.select(F.col("dst").alias("node")))
-             .distinct()
-             .localCheckpoint())
-    n = nodes.count()
     k = est_sat + 4
-    reach = k_hop(edges, nodes, k=k)
-    layer = {r["first_hop"]: r["n"]
-             for r in reach.groupBy("first_hop")
-             .agg(F.count(F.lit(1)).alias("n")).collect()}
+    n, layer = _exact_bfs_layers(edges, k)
     if layer.get(k, 0) > 0:
         raise RuntimeError(
             f"exact BFS still growing at hop {k} while the sketch "
@@ -1398,13 +1389,13 @@ def _kg_ppr(spark, sf_dir):
     """Personalized PageRank from the 3 lexicographically-first source
     entities (same seed rule as kg_khop): neighborhood-relative
     centrality, top 25."""
-    from cbor_ld_spark.operators.graph import personalized_pagerank
+    from cbor_ld_spark.operators.graph import pagerank
     from cbor_ld_spark.plans import shared_entity_edges
 
     e = shared_entity_edges(spark, sf_dir)
     seeds = (e.select(F.col("src").alias("node")).distinct()
              .orderBy("node").limit(3))
-    pr = personalized_pagerank(e, seeds)
+    pr = pagerank(e, seeds=seeds)
     return pr.orderBy(F.desc("rank"), "node").limit(25)
 
 
@@ -1498,7 +1489,8 @@ def _kg_pagerank_weighted(spark, sf_dir):
     from cbor_ld_spark.plans import shared_triples
 
     t = shared_triples(spark, sf_dir)
-    pr = pagerank(entity_edges_weighted(t))
+    # pagerank reads its edges every round: materialize them once
+    pr = pagerank(entity_edges_weighted(t).localCheckpoint())
     return pr.orderBy(F.desc("rank"), "node").limit(25)
 
 

@@ -1,29 +1,37 @@
 """Graph analytics over the extracted entity graph (KG tier).
 
-The pipeline's end product is a node/edge graph (triples with IRI
-objects are the entity->entity edges); these operators answer the
-questions a KG consumer asks first: who is central (PageRank, degree)
-and what is reachable (k-hop neighborhoods).  Both are deterministic
-fixed-iteration dataflows so the DuckDB oracle can replay them exactly
-(unrolled CTEs), same bar as every other operator here.
+Edges are ``(src, dst)`` IRI pairs (``entity_edges``), optionally with
+an evidence ``weight`` (``entity_edges_weighted``).  Operators:
 
-Scale shapes:
+* centrality: ``pagerank`` (plain, dangling-redistributed, weighted or
+  seeded/personalized), ``hits``, ``out_degrees``;
+* reachability: ``k_hop`` (batched BFS), ``transitive_closure`` (path
+  doubling), ``approx_neighborhood_function`` and
+  ``effective_diameter`` (HyperANF sketches);
+* structure: ``triangle_stats``, ``k_core_decomposition``,
+  ``label_propagation``, ``neighborhood_overlap`` (exact) and
+  ``neighborhood_overlap_lsh`` / ``adjacency_lsh_candidates`` (MinHash);
+* shared frames: ``graph_nodes`` (the node set) and
+  ``undirected_edges`` (the self-loop-free undirected projection).
 
-* ``pagerank`` — the classic iterative join: contributions =
-  edges join ranks on src (shuffle on src, uniform after dedup),
-  summed per dst with map-side partial aggregation.  The edge frame is
-  localCheckpoint'd once and reused every iteration (lineage cut —
-  round-1 lesson: each unpersisted reuse would replay the kernel), and
-  ranks persist per iteration with the previous handle released.
-  Fixed ``iters`` (no convergence check) keeps the job count bounded
-  and the result a pure function of the input.
-* ``k_hop`` — frontier expansion: k semi-join rounds, each a join on
-  the uniform edge key; the frontier stays (node, root) pairs so
-  multiple seeds batch in ONE dataflow instead of one traversal per
-  seed (the 100 TB shape: seeds come in thousands).
+Every result is a deterministic function of the edge set, so the
+DuckDB oracle replays it exactly (sketch operators: within a stated
+tolerance).
+
+Materialized-edges contract: ``pagerank``, ``k_hop``, ``hits``,
+``approx_neighborhood_function`` and ``effective_diameter`` read
+``edges`` once per round and do not checkpoint it.  Pass a
+materialized frame (a ``localCheckpoint``, a cached table or a local
+relation), or every round replays the edges' lineage.  What the
+operators derive (node sets, adjacency, per-round state) they
+localCheckpoint themselves: ``persist`` keeps the whole logical plan,
+which doubles per round, while a checkpoint cuts it.
 """
 
 from __future__ import annotations
+
+from collections.abc import Iterator
+from itertools import islice
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -54,10 +62,40 @@ def out_degrees(edges: DataFrame) -> DataFrame:
     return edges.groupBy("src").agg(w.alias("out_deg"))
 
 
+def graph_nodes(edges: DataFrame) -> DataFrame:
+    """The distinct ``node`` set (sources and destinations),
+    localCheckpoint'd: callers count it and join it every round."""
+    return (edges.select(F.col("src").alias("node"))
+            .unionByName(edges.select(F.col("dst").alias("node")))
+            .distinct()
+            .localCheckpoint())
+
+
+def undirected_edges(edges: DataFrame) -> DataFrame:
+    """Distinct undirected edges ``(a, b)`` with ``a < b``, self-loops
+    dropped.  Lazy: callers checkpoint what they reuse."""
+    return (edges.filter(F.col("src") != F.col("dst"))
+            .select(F.least("src", "dst").alias("a"),
+                    F.greatest("src", "dst").alias("b"))
+            .distinct())
+
+
+def _symmetric(edges: DataFrame) -> DataFrame:
+    """Both orientations ``(u, v)`` and ``(v, u)`` of every undirected
+    edge, localCheckpoint'd: the adjacency frame that neighbor
+    aggregations join every round."""
+    und = undirected_edges(edges)
+    return (und.select(F.col("a").alias("u"), F.col("b").alias("v"))
+            .unionByName(und.select(F.col("b").alias("u"),
+                                    F.col("a").alias("v")))
+            .localCheckpoint())
+
+
 def pagerank(edges: DataFrame, iters: int = 5,
              damping: float = 0.85, round_to: int = 6,
-             redistribute_dangling: bool = False) -> DataFrame:
-    """Fixed-iteration PageRank over the distinct edge list.
+             redistribute_dangling: bool = False,
+             seeds: DataFrame | None = None) -> DataFrame:
+    """Fixed-iteration PageRank over a materialized edge list.
 
     rank_0 = 1/N for the N distinct nodes (sources + destinations);
     rank_{t+1}(v) = (1-d)/N + d * sum(rank_t(u)/out_deg(u), u->v).
@@ -72,69 +110,77 @@ def pagerank(edges: DataFrame, iters: int = 5,
     — one extra 1-row aggregation per iteration — and rank sums stay
     ~1.0, the variant a consumer comparing ranks ACROSS graphs wants.
 
+    With ``seeds`` (a ``node`` column) this is personalized PageRank,
+    "what is central relative to these entities": N counts the seeds
+    present in the graph, and rank_0 and the (1-d)/N teleport go to
+    those seeds only (0 elsewhere).  No seed in the graph gives an
+    empty frame.  Seeds with ``redistribute_dangling`` raise
+    ValueError: that variant has no oracle.
+
+    Each node carries its teleport term as a column, so every variant
+    adds in the oracle's order: (1-d)/N, then d*dangling/N, then
+    d*inbound.
+
     Float note: the inbound sum's addition order is partition-dependent
     (FP non-associative), while the oracle sums sequentially.  The
-    divergence is ~1e-16 relative per iteration against a round-6
-    output granularity of 1e-6 — a boundary flip needs a rank within
-    ~1e-18 of a 0.5e-6 rounding edge (odds ~1e-12 per value), the
-    accepted residual for an order-free distributed aggregation.
+    divergence is ~1e-16 relative per iteration against the 1e-6
+    output granularity of ``round_to=6`` — a boundary flip needs a rank
+    within ~1e-18 of a 0.5e-6 rounding edge (odds ~1e-12 per value),
+    the accepted residual for an order-free distributed aggregation.
     """
-    weighted = "weight" in edges.columns
-    edges = edges.localCheckpoint()  # cut lineage once; reused 5+1 times
-    # nodes is joined every iteration: materialize it once too, or each
-    # new_ranks join would re-run the union+distinct shuffle
-    nodes = (edges.select(F.col("src").alias("node"))
-             .unionByName(edges.select(F.col("dst").alias("node")))
-             .distinct()
-             .localCheckpoint())
-    n = nodes.count()
+    if seeds is not None and redistribute_dangling:
+        raise ValueError("pagerank: seeds cannot be combined with "
+                         "redistribute_dangling")
+    nodes = graph_nodes(edges)
+    if seeds is None:
+        n = nodes.count()
+        at_seed = F.lit(True)
+    else:
+        seeds = (seeds.select("node").distinct().join(nodes, "node")
+                 .withColumn("_seed", F.lit(True))
+                 .localCheckpoint())
+        n = seeds.count()
+        nodes = nodes.join(F.broadcast(seeds), "node", "left")
+        at_seed = F.col("_seed").isNotNull()
     if n == 0:
         return edges.sparkSession.createDataFrame(
             [], "node string, rank double")
+    # rank_0 and the per-node teleport term, materialized once
+    nodes = nodes.select(
+        "node",
+        F.when(at_seed, 1.0 / n).otherwise(0.0).alias("rank"),
+        F.when(at_seed, (1.0 - damping) / n).otherwise(0.0).alias("_tp"),
+    ).localCheckpoint()
+    ranks, teleport = nodes.select("node", "rank"), nodes.drop("rank")
     deg = out_degrees(edges)
     # (src, dst, out_deg) reused every iteration
     e = edges.join(deg, "src").localCheckpoint()
-
     if redistribute_dangling:
-        # out-degree-0 nodes, fixed across iterations: checkpointed once
-        dangling_nodes = nodes.join(
+        # out-degree-0 nodes, fixed across iterations
+        dangling_nodes = teleport.select("node").join(
             deg.select(F.col("src").alias("node")), "node", "left_anti"
         ).localCheckpoint()
-
-    # Per-iteration localCheckpoint, not persist: persist keeps the full
-    # logical plan, which DOUBLES per iteration (measured: 61k -> 605k
-    # plan chars over 4 rounds) — exponential analysis/printing cost
-    # that OOMs the driver long before the data does.  The checkpoint
-    # cuts lineage each round; ContextCleaner reclaims old blocks.
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint()
+    cw = (F.col("rank") * F.col("weight") / F.col("out_deg")
+          if "weight" in edges.columns else F.col("rank") / F.col("out_deg"))
     for _ in range(iters):
-        cw = (F.col("rank") * F.col("weight") / F.col("out_deg")
-              if weighted else F.col("rank") / F.col("out_deg"))
         contribs = (
             e.join(ranks, e.src == ranks.node)
             .select(F.col("dst").alias("node"), cw.alias("c"))
             .groupBy("node")
             .agg(F.sum("c").alias("inbound")))
-        base_col = F.lit((1.0 - damping) / n)
+        new_ranks = teleport.join(contribs, "node", "left")
+        base = F.col("_tp")
         if redistribute_dangling:
-            # dangling mass as a broadcast 1-row frame instead of a
-            # per-iteration scalar collect: the iteration stays fully
-            # lazy (ONE job — the checkpoint — instead of two), no
-            # driver sync point per round.  Same IEEE arithmetic as the
-            # literal form ((1-d)/n + d*dm/n, left-associated), so the
-            # oracle replay is unchanged.
+            # dangling mass as a broadcast 1-row frame, not a collected
+            # scalar: the iteration stays one job with no driver sync
             dmf = (dangling_nodes.join(ranks, "node")
                    .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")))
-            base_col = (base_col
-                        + F.lit(damping) * F.col("_dm") / F.lit(float(n)))
-            new_ranks = (nodes.join(contribs, "node", "left")
-                         .crossJoin(F.broadcast(dmf)))
-        else:
-            new_ranks = nodes.join(contribs, "node", "left")
+            new_ranks = new_ranks.crossJoin(F.broadcast(dmf))
+            base = base + F.lit(damping) * F.col("_dm") / F.lit(float(n))
         ranks = (
             new_ranks
             .select("node",
-                    (base_col
+                    (base
                      + F.lit(damping) * F.coalesce("inbound", F.lit(0.0)))
                     .alias("rank"))
             .localCheckpoint())
@@ -153,9 +199,9 @@ def k_hop(edges: DataFrame, seeds: DataFrame, k: int = 3) -> DataFrame:
     materializing job) replaces the per-layer anti-join chain — O(k)
     joins in the whole plan instead of O(k^2), which is what survives
     k=10+ traversals.  The frontier is a filter on the checkpointed
-    visited set, not a separate materialization.
+    visited set, not a separate materialization.  ``edges`` must be
+    materialized (module contract).
     """
-    edges = edges.localCheckpoint()
     visited = (seeds.select(F.col("node").alias("root"), F.col("node"),
                             F.lit(0).alias("first_hop"))
                .localCheckpoint())
@@ -182,7 +228,7 @@ def transitive_closure(edges: DataFrame,
     in ceil(log2 D) shuffle rounds instead of D.  That is the term
     that matters on a 1000-executor cluster, where each round is a
     full shuffle barrier.  The accumulator is localCheckpoint'd per
-    round (iterative-plan lineage rule) and convergence is one scalar
+    round (module contract) and convergence is one scalar
     count per round.
 
     Scale honesty: the OUTPUT is inherently Θ(Σ over components of
@@ -238,11 +284,7 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     the standard global clustering coefficient (0 when the graph has
     no wedges), rounded to 6.
     """
-    und = (edges.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct()
-           .localCheckpoint())
+    und = undirected_edges(edges).localCheckpoint()
     deg = (und.select(F.col("a").alias("node"))
            .unionByName(und.select(F.col("b").alias("node")))
            .groupBy("node")
@@ -318,29 +360,22 @@ def neighborhood_overlap(edges: DataFrame,
     jaccard = common / (deg_a + deg_b - common)) for pairs with
     jaccard >= threshold, node_a < node_b.
     """
-    und = (edges.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct())
-    sym = (und.select(F.col("a").alias("c"), F.col("b").alias("n"))
-           .unionByName(und.select(F.col("b").alias("c"),
-                                   F.col("a").alias("n")))
-           .localCheckpoint())
-    deg = sym.groupBy(F.col("c").alias("node")) \
+    sym = _symmetric(edges)  # (center u, neighbor v)
+    deg = sym.groupBy(F.col("u").alias("node")) \
         .agg(F.count(F.lit(1)).alias("deg"))
     # attach endpoint degrees to the wedge legs so the threshold's
     # degree-ratio implication prunes INSIDE the join, before the
     # per-pair aggregation: jaccard >= t forces
     # common >= t * max(da, db) and common <= min(da, db), hence
     # min(da, db) >= t * max(da, db).
-    legs = sym.join(deg.select(F.col("node").alias("n"),
-                               F.col("deg").alias("dn")), "n")
-    e1 = legs.select("c", F.col("n").alias("x"), F.col("dn").alias("dx"))
-    e2 = legs.select("c", F.col("n").alias("y"), F.col("dn").alias("dy"))
+    legs = sym.join(deg.select(F.col("node").alias("v"),
+                               F.col("deg").alias("dv")), "v")
+    e1 = legs.select("u", F.col("v").alias("x"), F.col("dv").alias("dx"))
+    e2 = legs.select("u", F.col("v").alias("y"), F.col("dv").alias("dy"))
     # endpoint degrees ride the wedge legs and are constant per pair, so
     # first() through the aggregation replaces two whole degree joins
     # (plan: 7 exchanges instead of 11, 3 sort-merge joins instead of 5)
-    common = (e1.join(e2, "c")
+    common = (e1.join(e2, "u")
               .filter((F.col("x") < F.col("y"))
                       # 1e-6 slack: the output filter accepts ROUND-6
                       # jaccard >= threshold, so the prune must not drop
@@ -369,7 +404,7 @@ def neighborhood_overlap_lsh(edges: DataFrame, threshold: float = 0.5,
     """Merge candidates by neighborhood Jaccard — the minhash-LSH tier.
 
     Same output contract as ``neighborhood_overlap`` (node_a < node_b,
-    common_neighbors, jaccard >= threshold, round-6) but candidates come
+    common_neighbors, jaccard >= threshold, rounded to 6) but candidates come
     from banded MinHash over each node's undirected adjacency SET
     instead of the exact wedge join, then ONLY bucket-colliding pairs
     are reranked with the exact intersection count.
@@ -398,16 +433,16 @@ def neighborhood_overlap_lsh(edges: DataFrame, threshold: float = 0.5,
     is deterministic despite the probabilistic recall.
     """
     sym, pairs = adjacency_lsh_candidates(edges, num_hashes, bands)
-    deg = sym.groupBy(F.col("c").alias("node")) \
+    deg = sym.groupBy(F.col("u").alias("node")) \
         .agg(F.count(F.lit(1)).alias("deg"))
     # exact rerank on candidates only: fan each pair to node_a's
     # neighbors, keep rows where the neighbor is also node_b's — the
     # intermediate is deg(node_a) rows per candidate, and candidates
     # are bucket-bounded
-    pa = sym.select(F.col("c").alias("node_a"), F.col("n"))
-    pb = sym.select(F.col("c").alias("node_b"), F.col("n"))
+    pa = sym.select(F.col("u").alias("node_a"), "v")
+    pb = sym.select(F.col("u").alias("node_b"), "v")
     common = (pairs.join(pa, "node_a")
-              .join(pb, ["node_b", "n"])
+              .join(pb, ["node_b", "v"])
               .groupBy("node_a", "node_b")
               .agg(F.count(F.lit(1)).alias("common_neighbors")))
     da = deg.select(F.col("node").alias("node_a"),
@@ -427,25 +462,18 @@ def neighborhood_overlap_lsh(edges: DataFrame, threshold: float = 0.5,
 def adjacency_lsh_candidates(edges: DataFrame, num_hashes: int = 24,
                              bands: int = 8
                              ) -> tuple[DataFrame, DataFrame]:
-    """(symmetric adjacency frame, candidate pairs) for the LSH overlap
-    tier — split out so the candidate volume is testable on its own
+    """(symmetric ``(u, v)`` adjacency frame, candidate pairs) for the
+    LSH overlap tier — split out so the candidate volume is testable on its own
     (the mega-hub skew test asserts candidates << C(deg, 2))."""
     from cbor_ld_spark.operators.dedup import banded_signature_pairs
 
-    und = (edges.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct())
-    sym = (und.select(F.col("a").alias("c"), F.col("b").alias("n"))
-           .unionByName(und.select(F.col("b").alias("c"),
-                                   F.col("a").alias("n")))
-           .localCheckpoint())
+    sym = _symmetric(edges)
     # k seeded min-hashes over the adjacency set: sym is already one
     # row per (node, neighbor), so the signature is a single hash
     # aggregation — no explode, no higher-order folds
-    aggs = [F.min(F.xxhash64("n", F.lit(i))).alias(f"mh_{i}")
+    aggs = [F.min(F.xxhash64("v", F.lit(i))).alias(f"mh_{i}")
             for i in range(num_hashes)]
-    sigs = (sym.groupBy(F.col("c").alias("node")).agg(*aggs)
+    sigs = (sym.groupBy(F.col("u").alias("node")).agg(*aggs)
             .select("node",
                     F.array(*[F.col(f"mh_{i}")
                               for i in range(num_hashes)])
@@ -456,127 +484,53 @@ def adjacency_lsh_candidates(edges: DataFrame, num_hashes: int = 24,
     return sym, pairs
 
 
-def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
-                          iters: int = 5, damping: float = 0.85,
-                          round_to: int = 6) -> DataFrame:
-    """PageRank with teleportation restricted to a seed set — "what is
-    central *relative to these entities*", the KG neighborhood-ranking
-    primitive.  rank_0 = 1/|S| on seeds (0 elsewhere); each iteration
-    the (1-d) teleport mass returns to the seeds uniformly.  Same
-    iterative-join shape as ``pagerank``; the seed frame is broadcast
-    (seed sets are small by definition).
-    """
-    edges = edges.localCheckpoint()
-    nodes = (edges.select(F.col("src").alias("node"))
-             .unionByName(edges.select(F.col("dst").alias("node")))
-             .distinct()
-             .localCheckpoint())
-    seed_nodes = (seeds.select("node").distinct()
-                  .join(nodes, "node").localCheckpoint())
-    n_seeds = seed_nodes.count()
-    if n_seeds == 0:
-        return edges.sparkSession.createDataFrame(
-            [], "node string, rank double")
-    deg = out_degrees(edges)
-    e = edges.join(deg, "src").localCheckpoint()
-    is_seed = F.broadcast(seed_nodes.withColumn("_seed", F.lit(1)))
-
-    # localCheckpoint per iteration — same exponential-plan rationale
-    # as pagerank (persist does not cut lineage)
-    ranks = (nodes.join(is_seed, "node", "left")
-             .select("node",
-                     F.when(F.col("_seed").isNotNull(),
-                            F.lit(1.0 / n_seeds)).otherwise(F.lit(0.0))
-                     .alias("rank"))
-             .localCheckpoint())
-    for _ in range(iters):
-        contribs = (
-            e.join(ranks, e.src == ranks.node)
-            .select(F.col("dst").alias("node"),
-                    (F.col("rank") / F.col("out_deg")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("inbound")))
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .join(is_seed, "node", "left")
-            .select("node",
-                    (F.when(F.col("_seed").isNotNull(),
-                            F.lit((1.0 - damping) / n_seeds))
-                     .otherwise(F.lit(0.0))
-                     + F.lit(damping)
-                     * F.coalesce("inbound", F.lit(0.0))).alias("rank"))
-            .localCheckpoint())
-    return ranks.select("node", F.round("rank", round_to).alias("rank")) \
-        .localCheckpoint()
-
-
 def hits(edges: DataFrame, iters: int = 5,
          round_to: int = 6) -> DataFrame:
     """HITS hubs/authorities over the directed entity graph.
 
     a_{t+1}(v) = sum(h_t(u), u->v); h_{t+1}(u) = sum(a_{t+1}(v), u->v);
-    each vector L2-normalized per iteration (norms computed as 1-row
-    aggregations, applied as literals so the oracle replays the exact
-    arithmetic).  Same localCheckpoint'd-edges iterative-join shape as
-    PageRank.
+    each vector L2-normalized per iteration.  Norms are 1-row
+    aggregations broadcast back, not collected scalars, so the loop has
+    no driver sync; sqrt and division are IEEE in both engines, so the
+    oracle replays the same arithmetic.  A null or zero sum of squares
+    normalizes by 1.0, leaving an all-zero vector zero.  Each half-step
+    localCheckpoints its un-normalized vector (two lineage cuts per
+    iteration); ``edges`` must be materialized (module contract).
     """
     import math
 
     if iters < 1:
-        # av stays unbound with zero iterations — there is no meaningful
-        # "HITS after 0 rounds" output, so reject loudly
+        # there is no meaningful "HITS after 0 rounds" output
         raise ValueError(f"hits() requires iters >= 1, got {iters}")
-    edges = edges.localCheckpoint()
-    nodes = (edges.select(F.col("src").alias("node"))
-             .unionByName(edges.select(F.col("dst").alias("node")))
-             .distinct()
-             .localCheckpoint())
+    nodes = graph_nodes(edges)
     n = nodes.count()
     if n == 0:
         return edges.sparkSession.createDataFrame(
             [], "node string, hub double, authority double")
-    # Two lineage cuts per iteration (un-normalized frames); the
-    # normalized frames are cheap selects over the checkpoints.  With
-    # persist instead, the two chained frames per round grow the plan
-    # 4x per iteration — OOM at iters=4 on a 200-edge graph.
-    hv = (nodes.withColumn("hub", F.lit(1.0 / math.sqrt(n)))
-          .localCheckpoint())
-    av = None
 
-    def _l2_norm_frame(frame: DataFrame, col: str, out: str) -> DataFrame:
-        """1-row frame holding sqrt(sum(col^2)), with the collect-era
-        `sqrt(s or 1.0) or 1.0` null/zero handling folded in — kept as
-        a broadcast frame so the loop stays fully lazy (no driver sync
-        per iteration); sqrt/div are IEEE in both engines so the oracle
-        replay arithmetic is unchanged."""
+    def half_step(vec: DataFrame, frm: str, to: str, col_in: str,
+                  col_out: str) -> DataFrame:
+        """Sum ``col_in`` over each node's ``frm`` -> ``to`` edges into
+        ``col_out`` (0 for no edges), then L2-normalize."""
+        summed = (edges.join(vec, edges[frm] == vec.node)
+                  .groupBy(F.col(to).alias("node"))
+                  .agg(F.sum(col_in).alias(col_out)))
+        raw = (nodes.join(summed, "node", "left")
+               .select("node", F.coalesce(col_out, F.lit(0.0))
+                       .alias(col_out))
+               .localCheckpoint())
         s = F.col("_s")
-        return (frame.agg(F.sum(F.col(col) * F.col(col)).alias("_s"))
+        norm = (raw.agg(F.sum(F.col(col_out) * F.col(col_out)).alias("_s"))
                 .select(F.sqrt(F.when(s.isNull() | (s == 0.0), F.lit(1.0))
-                               .otherwise(s)).alias(out)))
+                               .otherwise(s)).alias("_norm")))
+        return (raw.crossJoin(F.broadcast(norm))
+                .select("node", (F.col(col_out) / F.col("_norm"))
+                        .alias(col_out)))
 
+    hv = nodes.withColumn("hub", F.lit(1.0 / math.sqrt(n)))
     for _ in range(iters):
-        auth = (edges.join(hv, edges.src == hv.node)
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.sum("hub").alias("authority")))
-        av_raw = (nodes.join(auth, "node", "left")
-                  .select("node", F.coalesce("authority", F.lit(0.0))
-                          .alias("authority"))
-                  .localCheckpoint())
-        av = (av_raw
-              .crossJoin(F.broadcast(_l2_norm_frame(av_raw, "authority",
-                                                    "_na")))
-              .select("node", (F.col("authority") / F.col("_na"))
-                      .alias("authority")))
-        hub = (edges.join(av, edges.dst == av.node)
-               .groupBy(F.col("src").alias("node"))
-               .agg(F.sum("authority").alias("hub")))
-        hv_raw = (nodes.join(hub, "node", "left")
-                  .select("node",
-                          F.coalesce("hub", F.lit(0.0)).alias("hub"))
-                  .localCheckpoint())
-        hv = (hv_raw
-              .crossJoin(F.broadcast(_l2_norm_frame(hv_raw, "hub", "_nh")))
-              .select("node", (F.col("hub") / F.col("_nh")).alias("hub")))
+        av = half_step(hv, "src", "dst", "hub", "authority")
+        hv = half_step(av, "dst", "src", "authority", "hub")
     return (hv.join(av, "node")
             .select("node", F.round("hub", round_to).alias("hub"),
                     F.round("authority", round_to).alias("authority"))
@@ -594,8 +548,8 @@ def k_core_decomposition(edges: DataFrame,
     result AND the iteration count are pure functions of the edge set
     (replayable by the oracle), with ``max_iters`` as a loud bound.
 
-    Scale shape (r7 — the bounded-histogram tier, VERDICT r6 #3): per
-    round, one shuffle join (adjacency x estimates, on the uniform
+    Scale shape (bounded histogram, so a mega-hub cannot skew a task):
+    per round, one shuffle join (adjacency x estimates, on the uniform
     node key), then the h-index is computed from a per-node VALUE
     HISTOGRAM instead of a per-node ``row_number`` window over raw
     neighbor messages.  The histogram ``groupBy(node, value)`` has
@@ -607,21 +561,14 @@ def k_core_decomposition(edges: DataFrame,
     per-node histogram at cap+1 rows, so the remaining cumulative-sum
     window touches <= cap+1 rows per node per round regardless of
     degree.  Bit-identical to the direct h-index (property-tested,
-    incl. a 10^4-degree hub); per-iteration localCheckpoint (the
-    iterative-plan lineage rule) and a 1-row convergence count.
+    incl. a 10^4-degree hub); per-iteration localCheckpoint (module
+    contract) and a 1-row convergence count.
 
     Output: (node, coreness int).
     """
     from pyspark.sql import Window
 
-    und = (edges.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct())
-    sym = (und.select(F.col("a").alias("u"), F.col("b").alias("v"))
-           .unionByName(und.select(F.col("b").alias("u"),
-                                   F.col("a").alias("v")))
-           .localCheckpoint())
+    sym = _symmetric(edges)
     cur = (sym.groupBy(F.col("u").alias("node"))
            .agg(F.count(F.lit(1)).alias("c"))
            .localCheckpoint())
@@ -665,6 +612,32 @@ def k_core_decomposition(edges: DataFrame,
     return cur.select("node", F.col("c").cast("int").alias("coreness"))
 
 
+def _anf_totals(edges: DataFrame, lg_k: int) -> Iterator[int]:
+    """The HyperANF hop loop: yields the floored ANF total at hop 0, 1,
+    2, ... for as long as the caller pulls (nothing for an empty
+    graph).  One edge join + one sketch union-aggregate per hop,
+    localCheckpoint'd, plus one 1-row collect of the total."""
+    nodes = graph_nodes(edges)
+    n = nodes.count()
+    if n == 0:
+        return
+    yield int(n)  # singleton sketches are exact by construction
+    # ball(v, 0) = {v}: one sketch per node over its own id
+    r = (nodes.groupBy("node")
+         .agg(F.hll_sketch_agg("node", F.lit(lg_k)).alias("sk"))
+         .localCheckpoint())
+    while True:
+        nbr = (edges.join(r, edges.dst == r.node)
+               .select(edges.src.alias("node"), "sk"))
+        r = (r.unionByName(nbr)
+             .groupBy("node")
+             .agg(F.hll_union_agg("sk").alias("sk"))
+             .localCheckpoint())
+        yield int(r.agg(
+            F.sum(F.floor(F.hll_sketch_estimate("sk")).cast("long"))
+            .alias("e")).collect()[0]["e"])
+
+
 def approx_neighborhood_function(edges: DataFrame, k: int = 4,
                                  lg_k: int = 12) -> DataFrame:
     """HyperANF-style approximate neighborhood function (Boldi/Rosa/
@@ -678,8 +651,8 @@ def approx_neighborhood_function(edges: DataFrame, k: int = 4,
     sketch per node (Spark's native Datasketches HLL via
     ``hll_sketch_agg`` / ``hll_union_agg`` — JVM-side, mergeable,
     register state independent of merge order), one edge join + one
-    union-aggregate per hop, localCheckpoint'd per iteration (the
-    iterative-plan lineage rule).
+    union-aggregate per hop (``_anf_totals``).  ``edges`` must be
+    materialized (module contract).
 
     Output: (hop, est_pairs) for hop 0..k.  Each per-node estimate is
     FLOORED to a long before summing, so the total is exact integer
@@ -687,32 +660,9 @@ def approx_neighborhood_function(edges: DataFrame, k: int = 4,
     lets the driver's oracle verify a sketch-based result by value
     (tolerance-bool pattern at the query layer).
     """
-    edges = edges.localCheckpoint()
-    nodes = (edges.select(F.col("src").alias("node"))
-             .unionByName(edges.select(F.col("dst").alias("node")))
-             .distinct()
-             .localCheckpoint())
-    spark = edges.sparkSession
-    n = nodes.count()
-    if n == 0:
-        return spark.createDataFrame([], "hop int, est_pairs long")
-    # ball(v, 0) = {v}: one sketch per node over its own id
-    r = (nodes.groupBy("node")
-         .agg(F.hll_sketch_agg("node", F.lit(lg_k)).alias("sk"))
-         .localCheckpoint())
-    est_rows = [(0, int(n))]  # singleton sketches are exact by construction
-    for h in range(1, k + 1):
-        nbr = (edges.join(r, edges.dst == r.node)
-               .select(edges.src.alias("node"), "sk"))
-        r = (r.unionByName(nbr)
-             .groupBy("node")
-             .agg(F.hll_union_agg("sk").alias("sk"))
-             .localCheckpoint())
-        est = r.agg(
-            F.sum(F.floor(F.hll_sketch_estimate("sk")).cast("long"))
-            .alias("e")).collect()[0]["e"]
-        est_rows.append((h, int(est)))
-    return spark.createDataFrame(est_rows, "hop int, est_pairs long")
+    return edges.sparkSession.createDataFrame(
+        list(enumerate(islice(_anf_totals(edges, lg_k), k + 1))),
+        "hop int, est_pairs long")
 
 
 def effective_diameter(edges: DataFrame, alpha: float = 0.9,
@@ -724,13 +674,13 @@ def effective_diameter(edges: DataFrame, alpha: float = 0.9,
     pairs are within h hops" statistic, computable at 10^12 scale
     because it needs only the ANF curve, never all-pairs distances.
 
-    Runs the same sketch-per-node iteration as
-    ``approx_neighborhood_function`` but to SATURATION (stops the hop
-    after the floored-estimate total stops growing) instead of a fixed
-    k, with ``max_hops`` as the loud bound.  The threshold compare is
-    exact integer arithmetic (``alpha`` as a fraction, cross-
-    multiplied), so the result is a deterministic pure function of the
-    edge set — the property the tolerance-bool oracle pattern needs.
+    Runs the same hop loop as ``approx_neighborhood_function`` but to
+    SATURATION (stops the hop after the floored-estimate total stops
+    growing) instead of a fixed k, with ``max_hops`` as the loud bound.
+    The threshold compare is exact integer arithmetic (``alpha`` as a
+    fraction, cross-multiplied), so the result is a deterministic pure
+    function of the edge set — the property the tolerance-bool oracle
+    pattern needs.  ``edges`` must be materialized (module contract).
 
     Returns ``(eff_hops, saturation_hop, curve)`` where ``curve[h]``
     is the floored ANF total at hop h (driver-side ints: one 1-row
@@ -738,37 +688,18 @@ def effective_diameter(edges: DataFrame, alpha: float = 0.9,
     from fractions import Fraction
 
     fa = Fraction(alpha).limit_denominator(10 ** 6)
-    edges = edges.localCheckpoint()
-    nodes = (edges.select(F.col("src").alias("node"))
-             .unionByName(edges.select(F.col("dst").alias("node")))
-             .distinct()
-             .localCheckpoint())
-    n = nodes.count()
-    if n == 0:
-        return 0, 0, [0]
-    r = (nodes.groupBy("node")
-         .agg(F.hll_sketch_agg("node", F.lit(lg_k)).alias("sk"))
-         .localCheckpoint())
-    curve = [int(n)]
-    sat = None
-    for _h in range(1, max_hops + 1):
-        nbr = (edges.join(r, edges.dst == r.node)
-               .select(edges.src.alias("node"), "sk"))
-        r = (r.unionByName(nbr)
-             .groupBy("node")
-             .agg(F.hll_union_agg("sk").alias("sk"))
-             .localCheckpoint())
-        est = int(r.agg(
-            F.sum(F.floor(F.hll_sketch_estimate("sk")).cast("long"))
-            .alias("e")).collect()[0]["e"])
-        if est == curve[-1]:
-            sat = _h - 1  # no growth this hop: saturated at previous
-            break
+    curve: list[int] = []
+    for est in islice(_anf_totals(edges, lg_k), max_hops + 1):
+        if curve and est == curve[-1]:
+            break  # no growth this hop: saturated at the previous one
         curve.append(est)
-    if sat is None:
-        raise RuntimeError(
-            f"effective_diameter: ANF total still growing after "
-            f"{max_hops} hops — raise max_hops")
+    else:
+        if curve:
+            raise RuntimeError(
+                f"effective_diameter: ANF total still growing after "
+                f"{max_hops} hops — raise max_hops")
+        return 0, 0, [0]  # empty graph
+    sat = len(curve) - 1
     final = curve[sat]
     eff = next(h for h in range(sat + 1)
                if curve[h] * fa.denominator >= fa.numerator * final)
@@ -785,7 +716,7 @@ def label_propagation(edges: DataFrame, iters: int = 5,
     label (so the result is a pure function of the edge set — no
     random ordering, replayable by the oracle).  Isolated nodes keep
     their own label.  Fixed iterations; per-iteration localCheckpoint
-    (iterative-join lineage hygiene — see pagerank).
+    (module contract).
 
     Scale shape: one shuffle join + one (node, label) hash aggregation
     + one per-node window (partitioned by node, never global) per
@@ -805,18 +736,8 @@ def label_propagation(edges: DataFrame, iters: int = 5,
     """
     from pyspark.sql import Window
 
-    sym = (edges.filter(F.col("src") != F.col("dst"))
-           .select(F.least("src", "dst").alias("a"),
-                   F.greatest("src", "dst").alias("b"))
-           .distinct())
-    sym = (sym.select(F.col("a").alias("u"), F.col("b").alias("v"))
-           .unionByName(sym.select(F.col("b").alias("u"),
-                                   F.col("a").alias("v")))
-           .localCheckpoint())
-    nodes = (edges.select(F.col("src").alias("node"))
-             .unionByName(edges.select(F.col("dst").alias("node")))
-             .distinct()
-             .localCheckpoint())
+    sym = _symmetric(edges)
+    nodes = graph_nodes(edges)
 
     has_hot = False
     sym_cold = sym

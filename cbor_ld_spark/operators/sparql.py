@@ -35,6 +35,7 @@ Bare tokens end at whitespace or any of ``()/|+*?^!``.
 
 from __future__ import annotations
 
+import re as _re
 import shlex
 
 _MODS = {"+": "plus", "*": "star", "?": "opt"}
@@ -342,6 +343,9 @@ _KEYWORDS = {"select", "where", "optional", "filter", "union",
              "distinct", "reduced", "not", "exists", "values", "bind",
              "ask", "construct", "minus", "offset", "graph"}
 _PATH_CHARS = set("/|^!+*?()")
+# SPARQL IRIREF: no whitespace (and none of <>"{}|^`\) before the
+# closing '>' — so '<' followed by a space is the less-than operator
+_IRIREF = _re.compile(r'<[^<>"{}|^`\\\x00-\x20]*>')
 
 
 _RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -428,14 +432,16 @@ def _sparql_tokens(text: str) -> list[str]:
                         f"unterminated '<' in query at {j}")
                 j = k + 1
             elif text[j] == "(":
-                # quoted strings inside the parens are opaque — a
-                # paren INSIDE a literal (FILTER(?name = "a(b")) must
-                # not count toward the depth (ADVICE r7); BOTH quote
-                # characters, matching _quote_segments/_devar (a
-                # single-quoted SQL literal containing ')' previously
-                # mis-tokenized)
+                # IRIs and quoted strings inside the parens are opaque:
+                # a paren inside a literal (FILTER(?name = "a(b")) must
+                # not count toward the depth, and a quote inside an IRI
+                # (<urn:o'brien>) opens no literal.  Same rules as
+                # _quote_segments.
                 depth, k = 1, j + 1
                 while k < n and depth:
+                    if text[k] == "<" and (iri := _IRIREF.match(text, k)):
+                        k = iri.end()
+                        continue
                     if text[k] in "\"'":
                         q = text.find(text[k], k + 1)
                         if q < 0:
@@ -590,9 +596,6 @@ def _parse_optional_group(toks: list[str], pos: int) -> tuple[dict, int]:
     return g, pos + 1
 
 
-import re as _re
-
-
 # SPARQL 1.1 §17 built-ins with a direct Spark SQL equivalent over
 # the plain-string triple model (name-for-name rewrite; arguments
 # pass through unchanged).  SAMPLE -> min is a deterministic choice
@@ -614,23 +617,26 @@ _SPARQL_FN_UNSUPPORTED = (
 
 
 def _quote_segments(body: str):
-    """Yield (segment, is_quoted) pairs — '...'/"..." literals are
-    opaque to every rewrite."""
+    """Yield (segment, is_opaque) pairs — '...'/"..." literals and
+    <iri> refs are opaque to every rewrite (a quote inside an IRI opens
+    no literal)."""
     i, n, start = 0, len(body), 0
     while i < n:
         c = body[i]
-        if c in "\"'":
-            j = body.find(c, i + 1)
-            if j < 0:
+        if c == "<" and (iri := _IRIREF.match(body, i)):
+            j = iri.end()
+        elif c in "\"'":
+            j = body.find(c, i + 1) + 1
+            if not j:
                 raise ValueError(f"unterminated {c} in expression "
                                  f"{body!r}")
-            if start < i:
-                yield body[start:i], False
-            yield body[i:j + 1], True
-            i = j + 1
-            start = i
         else:
             i += 1
+            continue
+        if start < i:
+            yield body[start:i], False
+        yield body[i:j], True
+        i = start = j
     if start < n:
         yield body[start:], False
 

@@ -212,7 +212,7 @@ def _analytics_stage(spark: SparkSession, out_dir: str, run_id: str,
     """Write (or REUSE) the analytics product tables over the distinct
     canonical entity-edge frame; returns True when reused.
 
-    Incremental maintenance on corpus append (r6 VERDICT #6): the
+    Incremental maintenance on corpus append: the
     analytics tables are a pure function of the entity-edge set, so
     the stage fingerprints it — ``(count, bit_xor(xxhash64(src,
     dst)))``, one order-insensitive 1-row aggregate — and SKIPS the
@@ -245,7 +245,7 @@ def _analytics_stage(spark: SparkSession, out_dir: str, run_id: str,
     fp_path = os.path.join(out_dir, "analytics", "edges_fingerprint")
     prior = None
     try:
-        # mergeSchema: a dir written by the pre-r8 schema (no
+        # mergeSchema: a dir written by the older schema (no
         # tables_run_id) may be appended to by this one — keep the new
         # column visible regardless of which footer Spark samples
         rows = (spark.read.option("mergeSchema", "true").parquet(fp_path)
@@ -254,7 +254,7 @@ def _analytics_stage(spark: SparkSession, out_dir: str, run_id: str,
     except Exception:
         prior = None
 
-    # Crash safety (ADVICE r7): the fingerprint row alone cannot prove
+    # Crash safety: the fingerprint row alone cannot prove
     # the tables on disk belong to the fingerprinted edge set — a run
     # that overwrote some tables and died before the fingerprint append
     # leaves the latest row pointing at the PREVIOUS edge set.  So each
@@ -283,7 +283,7 @@ def _analytics_stage(spark: SparkSession, out_dir: str, run_id: str,
               and all(i == prior_tables_run for i in _table_run_ids()))
     tables_run_id = prior_tables_run if reused else run_id
     if not reused:
-        pr = pagerank(ent, redistribute_dangling=True).localCheckpoint()
+        pr = pagerank(ent, redistribute_dangling=True)
         (pr.withColumn("run_id", F.lit(run_id))
            .write.mode("overwrite").parquet(
                os.path.join(out_dir, "analytics", "pagerank")))

@@ -1174,6 +1174,10 @@ def test_sparql_tokens_quoted_paren():
 
     toks = _sparql_tokens('FILTER(?name = "a(b")')
     assert toks == ['FILTER(?name = "a(b")']
+    # '<' then whitespace is less-than, not an IRI running to the '>'
+    # inside the literal
+    assert (_sparql_tokens("FILTER(?a < 'b>c)')")
+            == ["FILTER(?a < 'b>c)')"])
     with pytest.raises(ValueError, match="unbalanced"):
         _sparql_tokens('FILTER(?name = x(')
 
@@ -1953,6 +1957,17 @@ def test_single_quoted_literal_with_paren_tokenizes():
     s = parse_sparql("SELECT * WHERE { ?s <urn:p> ?o . "
                      "FILTER(?o = 'a) b') }")
     assert s["filters"] == ["o = 'a) b'"]
+
+
+def test_filter_iri_with_quote_tokenizes():
+    """A quote inside an IRI (<urn:o'brien>) opens no string literal:
+    the paren scanner and the expression rewrite skip IRIREF
+    segments."""
+    from cbor_ld_spark.operators.sparql import parse_sparql
+
+    s = parse_sparql("SELECT * WHERE { ?s <urn:p> ?o . "
+                     "FILTER(?s = <urn:o'brien>) }")
+    assert s["filters"] == ["s = <urn:o'brien>"]
 
 
 def test_values_undef_plus_concrete_no_duplicates(spark):

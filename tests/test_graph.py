@@ -244,21 +244,41 @@ def test_personalized_pagerank_hand_checked(spark):
     """Seed-restricted teleport: with seed {a} on a->c, b->c, c->a,
     one iteration gives a=0.15 (teleport only), c=0.85, b=0; mass is
     conserved (sums to 1.0 every iteration)."""
-    from cbor_ld_spark.operators.graph import personalized_pagerank
+    from cbor_ld_spark.operators.graph import pagerank
 
     e = _edges(spark, [("a", "c"), ("b", "c"), ("c", "a")])
     seeds = spark.createDataFrame([("a",)], "node string")
     r1 = {r["node"]: r["rank"]
-          for r in personalized_pagerank(e, seeds, iters=1).collect()}
+          for r in pagerank(e, seeds=seeds, iters=1).collect()}
     assert r1 == {"a": 0.15, "b": 0.0, "c": 0.85}
     for iters in (2, 5):
         total = sum(r["rank"] for r in
-                    personalized_pagerank(e, seeds, iters=iters).collect())
+                    pagerank(e, seeds=seeds, iters=iters).collect())
         assert abs(total - 1.0) < 1e-4
     # seeds outside the graph contribute nothing; empty effective seed
     # set returns an empty frame
     ghost = spark.createDataFrame([("zz",)], "node string")
-    assert personalized_pagerank(e, ghost).count() == 0
+    assert pagerank(e, seeds=ghost).count() == 0
+
+
+def test_pagerank_all_seeds_equals_plain(spark):
+    """Seeding every node is plain PageRank, row for row (same teleport
+    and rank_0 per node); seeds with dangling redistribution raise."""
+    import pytest
+
+    from cbor_ld_spark.operators.graph import pagerank
+
+    e = _edges(spark, [(f"n{i}", f"n{(i * 7) % 13}") for i in range(20)]
+               + [("n3", "sink"), ("n5", "sink")])
+    every = e.select(F.col("src").alias("node")).unionByName(
+        e.select(F.col("dst").alias("node")))
+    for iters in (1, 5):
+        plain = sorted(tuple(r) for r in pagerank(e, iters=iters).collect())
+        seeded = sorted(tuple(r) for r in
+                        pagerank(e, iters=iters, seeds=every).collect())
+        assert seeded == plain
+    with pytest.raises(ValueError, match="redistribute_dangling"):
+        pagerank(e, seeds=every, redistribute_dangling=True)
 
 
 def test_hits_hand_checked_and_normalized(spark):
