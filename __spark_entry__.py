@@ -41,15 +41,10 @@ def _kg_corpus_shape(spark, sf_dir):
 
 
 def _kg_doc_results(spark, sf_dir):
-    from cbor_ld_spark.operators import process_corpus
-    from cbor_ld_spark.sources import corpus_from_documents
+    from cbor_ld_spark.plans import shared_docs
 
     return (
-        # doc-level flags only: skip triple expansion + the seven array
-        # columns through Arrow and the provenance join (guide §2.3
-        # "shuffle fewer bytes"; result is identical)
-        process_corpus(corpus_from_documents(spark, sf_dir),
-                       emit_triples=False)
+        shared_docs(spark, sf_dir)
         .groupBy("ok", "error_kind")
         .agg(F.count(F.lit(1)).alias("docs"),
              F.sum(F.coalesce(F.col("roundtrip_ok").cast("long"), F.lit(0)))
@@ -71,10 +66,9 @@ def _kg_triples_by_pred(spark, sf_dir):
 
 
 def _kg_roundtrip_violations(spark, sf_dir):
-    from cbor_ld_spark.operators import process_corpus
-    from cbor_ld_spark.sources import corpus_from_documents
+    from cbor_ld_spark.plans import shared_docs
 
-    p = process_corpus(corpus_from_documents(spark, sf_dir), emit_triples=False)
+    p = shared_docs(spark, sf_dir)
     return p.filter(F.col("ok") & ~F.col("roundtrip_ok")).select(
         "repo", "path", "doc_sha")
 
@@ -270,13 +264,9 @@ def _kg_compression_stats(spark, sf_dir):
     value proposition measured corpus-wide.  Lengths are constants per
     class (the entity-UUID templating is length-preserving and the
     urn:uuid codec emits fixed-width binary), which min==max asserts."""
-    from cbor_ld_spark.operators import process_corpus
-    from cbor_ld_spark.sources import corpus_from_documents
+    from cbor_ld_spark.plans import shared_docs
 
-    # length stats only: skip triple expansion through the kernel and
-    # Arrow (guide §2.3; result is identical)
-    p = process_corpus(corpus_from_documents(spark, sf_dir),
-                       emit_triples=False)
+    p = shared_docs(spark, sf_dir)
     cls = F.regexp_extract("path", r"/([^/]+)\.jsonld$", 1)
     return (
         p.filter(F.col("ok"))
@@ -613,6 +603,10 @@ def _kg_bgp_filter(spark, sf_dir):
     return out.orderBy("cred", "issuer", "issued")
 
 
+# kg_sparql_select: the kg_bgp_filter query as a query string —
+# tokenizer (opaque <>/()/" segments), recursive parse, the same
+# match_bgp plan.  Shares kg_bgp_filter's oracle, so text-path vs
+# programmatic-path equivalence is a hard driver signal.
 _SPARQL_SELECT_TEXT = f"""
 SELECT ?cred ?issuer ?issued WHERE {{
   ?cred <{_IRI_ISSUER}> ?issuer .
@@ -629,27 +623,17 @@ _TRUAGE_ISSUER = \
     "did:key:z6MkkUbCFazdoducKf8SUye7cAxuicMdDBhXKWuTEuGA3jQF"
 
 
+# kg_sparql_path_type: a property path INSIDE a BGP — the rdf:type of
+# every document chaining to the TruAge issuer.  The path pattern
+# (ground object -> seeded frontier, operators/bgp.py `_path_frame`)
+# joins into the bindings like a pattern frame.  Oracle: Python replay
+# of the path relation filtered to the ground issuer, joined with the
+# realized rdf:type triples.
 _SPARQL_PATH_TYPE_TEXT = f"""
 SELECT ?cred ?t WHERE {{
   ?cred <{_IRI_VC}>?/<{_IRI_ISSUER}> <{_TRUAGE_ISSUER}> .
   ?cred <{_IRI_RDF_TYPE}> ?t
 }}"""
-
-
-def _kg_sparql_path_type(spark, sf_dir):
-    """Property path INSIDE a BGP, from the text surface (r7): the
-    rdf:type of every document chaining to the TruAge issuer — the
-    path pattern (ground object -> SEEDED frontier tier,
-    operators/bgp.py `_path_frame`) joins into the bindings like a
-    pattern frame and composes with the plain type pattern.  Oracle:
-    Python replay of the path relation filtered to the ground issuer,
-    joined with the realized rdf:type triples."""
-    from cbor_ld_spark.operators.sparql import run_sparql
-    from cbor_ld_spark.plans import shared_triples
-
-    out = run_sparql(shared_triples(spark, sf_dir),
-                     _SPARQL_PATH_TYPE_TEXT)
-    return out.orderBy("cred", "t")
 
 
 def _sparql_path_type_oracle(sf_dir: str | None = None) -> str:
@@ -669,6 +653,9 @@ def _sparql_path_type_oracle(sf_dir: str | None = None) -> str:
         rows, [("cred", "VARCHAR"), ("t", "VARCHAR")], "cred, t")
 
 
+# kg_sparql_group: GROUP BY / HAVING / ORDER BY parsed from text and
+# compiled to the same groupBy-over-bindings plan as kg_bgp_group,
+# whose oracle it shares (text/programmatic tier equivalence).
 _SPARQL_GROUP_TEXT = f"""
 SELECT ?issuer (COUNT(DISTINCT ?cred) AS ?n_creds)
        (COUNT(DISTINCT ?person) AS ?n_subjects)
@@ -681,35 +668,13 @@ HAVING(?n_creds > 1)
 ORDER BY ?issuer"""
 
 
-def _kg_sparql_group(spark, sf_dir):
-    """SPARQL aggregation in TEXT form (r7): GROUP BY / HAVING /
-    ORDER BY parsed from the query string and compiled to the same
-    groupBy-over-bindings plan as kg_bgp_group — whose oracle this
-    query shares (text/programmatic tier equivalence, the same
-    hard-signal pattern as kg_sparql_select)."""
-    from cbor_ld_spark.operators.sparql import run_sparql
-    from cbor_ld_spark.plans import shared_triples
-
-    return run_sparql(shared_triples(spark, sf_dir),
-                      _SPARQL_GROUP_TEXT)
-
-
-def _kg_sparql_select(spark, sf_dir):
-    """The SPARQL SELECT TEXT surface (r7, operators/sparql.py
-    parse_sparql/run_sparql): the kg_bgp_filter query written as an
-    actual query string — tokenizer (opaque <>/()/\" segments),
-    recursive parse, routed through the same match_bgp plan.  Shares
-    kg_bgp_filter's oracle, so text-path vs programmatic-path
-    equivalence is a hard driver signal, same tier-equivalence pattern
-    as the rules engine's naive/semi-naive pair."""
-    from cbor_ld_spark.operators.sparql import run_sparql
-    from cbor_ld_spark.plans import shared_triples
-
-    out = run_sparql(shared_triples(spark, sf_dir),
-                     _SPARQL_SELECT_TEXT)
-    return out.orderBy("cred", "issuer", "issued")
-
-
+# kg_sparql_bind: the issuance YEAR as a BIND-derived column feeding
+# GROUP BY — a plain projection between the pattern joins and the
+# aggregation (match_bgp ``binds=``), so a FILTER over a BIND alias
+# still reaches the pattern scan
+# (tests/test_bgp.py::test_sparql_bind_filter_pushdown).  Oracle: the
+# (cred, issuer, issued) bindings replayed in Python; the BIND and the
+# aggregation in SQL (DuckDB substring + GROUP BY).
 _SPARQL_BIND_TEXT = f"""
 SELECT ?issuer ?year (COUNT(DISTINCT ?cred) AS ?n_creds)
 WHERE {{
@@ -721,24 +686,13 @@ GROUP BY ?issuer ?year
 ORDER BY ?issuer ?year"""
 
 
-def _kg_sparql_bind(spark, sf_dir):
-    """SPARQL BIND in the text surface (r8, VERDICT r7 #1): the
-    issuance YEAR is a derived column (substring over the binding)
-    feeding GROUP BY — compiled to a plain projection between the
-    pattern joins and the aggregation (operators/bgp.py match_bgp
-    ``binds=``), so Catalyst folds it: a FILTER over a BIND alias
-    still reaches the pattern scan (plan-tested,
-    tests/test_bgp.py::test_sparql_bind_filter_pushdown).  Oracle: the
-    (cred, issuer, issued) bindings replayed in Python; the BIND and
-    the aggregation stated in actual SQL (DuckDB substring + GROUP
-    BY)."""
-    from cbor_ld_spark.operators.sparql import run_sparql
-    from cbor_ld_spark.plans import shared_triples
-
-    return run_sparql(shared_triples(spark, sf_dir),
-                      _SPARQL_BIND_TEXT)
-
-
+# kg_sparql_values: binding-introducing VALUES (SPARQL 1.1 §10.2):
+# ?issuer is a join key, ?tier a fresh variable, and the UNDEF row is
+# compatible with every issuer — every credential lands in tier "any",
+# TruAge-issued ones also in "truage".  A broadcast inline-data join
+# (operators/sparql.py ``_apply_values``), no shuffle.  Oracle: the
+# (cred, issuer) bindings replayed in Python, the inline data as a SQL
+# ``VALUES`` table joined with the same NULL-compatible condition.
 _SPARQL_VALUES_TEXT = f"""
 SELECT ?cred ?issuer ?tier WHERE {{
   ?cred <{_IRI_ISSUER}> ?issuer .
@@ -749,29 +703,25 @@ SELECT ?cred ?issuer ?tier WHERE {{
 ORDER BY ?cred ?tier"""
 
 
-def _kg_sparql_values(spark, sf_dir):
-    """Binding-introducing VALUES (r8, VERDICT r7 #1 — SPARQL 1.1
-    §10.2 inline data): ?issuer is a JOIN key, ?tier a FRESH variable,
-    and the UNDEF row is compatible with every issuer — so every
-    credential lands in tier "any" and TruAge-issued ones additionally
-    in "truage".  Compiles to a broadcast inline-data join
-    (operators/sparql.py ``_apply_values``), no shuffle.  Oracle: the
-    (cred, issuer) bindings replayed in Python, the inline data as an
-    actual SQL ``VALUES`` table joined with the same NULL-compatible
-    condition."""
-    from cbor_ld_spark.operators.sparql import run_sparql
-    from cbor_ld_spark.plans import shared_triples
-
-    return run_sparql(shared_triples(spark, sf_dir),
-                      _SPARQL_VALUES_TEXT)
-
-
 _SPARQL_CONSTRUCT_R1 = f"""
 CONSTRUCT {{ ?i <urn:ex:vouchesFor> ?p }}
 WHERE {{ ?cred <{_IRI_ISSUER}> ?i . ?cred <{_IRI_SUBJECT}> ?p }}"""
 _SPARQL_CONSTRUCT_R2 = f"""
 CONSTRUCT {{ ?i <urn:ex:vouchesForAdult> ?p }}
 WHERE {{ ?i <urn:ex:vouchesFor> ?p . ?p <{_IRI_OVERAGE}> ?age }}"""
+
+
+def _sparql_query(text: str, *order: str):
+    """Registry query: ``text`` run over the shared triples tier,
+    ordered by ``order`` when given."""
+    def run(spark, sf_dir):
+        from cbor_ld_spark.operators.sparql import run_sparql
+        from cbor_ld_spark.plans import shared_triples
+
+        out = run_sparql(shared_triples(spark, sf_dir), text)
+        return out.orderBy(*order) if order else out
+
+    return run
 
 
 def _kg_sparql_construct(spark, sf_dir):
@@ -799,28 +749,27 @@ def _kg_sparql_construct(spark, sf_dir):
 _IRI_OVERAGE_TYPE = "https://w3id.org/age#OverAgeTokenCredential"
 _IRI_PROOF_PURPOSE = "https://w3id.org/security#proofPurpose"
 _IRI_CREATED = "http://purl.org/dc/terms/created"
+
+# kg_sparql_ask: ASK over a both-ground property path — is any
+# OverAgeTokenCredential-typed document issued by the TruAge issuer?
+# Exercises the meet-in-the-middle tier (operators/bgp.py
+# ``_bidi_pair``): creds typed OverAge (inverse rdf:type step) are
+# intersected with creds issued by the did:key.  One boolean row.
+# Oracle: the same intersection replayed in Python, as a SQL boolean
+# literal.
 _SPARQL_ASK_TEXT = (f"ASK {{ <{_IRI_OVERAGE_TYPE}> "
                     f"^<{_IRI_RDF_TYPE}>/<{_IRI_ISSUER}> "
                     f"<{_TRUAGE_ISSUER}> }}")
 
 
-def _kg_sparql_ask(spark, sf_dir):
-    """ASK in the text surface (r8, VERDICT r7 #5) over a BOTH-GROUND
-    property path — "is any OverAgeTokenCredential-typed document
-    issued by the TruAge issuer?" — which exercises the
-    meet-in-the-middle tier (r8, operators/bgp.py ``_bidi_pair``): the
-    2-step sequence splits at the midpoint, creds typed OverAge
-    (inverse rdf:type step, forward from the type constant) are
-    intersected with creds issued by the did:key (backward from the
-    issuer constant).  Exactly one boolean row either way.  Oracle:
-    the same intersection replayed in Python, emitted as a SQL boolean
-    literal."""
-    from cbor_ld_spark.operators.sparql import run_sparql
-    from cbor_ld_spark.plans import shared_triples
-
-    return run_sparql(shared_triples(spark, sf_dir), _SPARQL_ASK_TEXT)
-
-
+# kg_sparql_minus: MINUS + an OFFSET/LIMIT slice — issued credentials
+# NOT typed OverAgeTokenCredential.  The MINUS group shares ?cred (the
+# connected case, where §8.3 MINUS and FILTER NOT EXISTS coincide), so
+# it compiles to one left_anti join; a disconnected MINUS is rejected
+# loudly.  ORDER BY over unique (cred, issuer) pairs makes the slice
+# deterministic (offset before limit, whatever the written order).
+# Oracle: both binding sets replayed in Python, the anti-join and the
+# slice in SQL (NOT EXISTS + LIMIT/OFFSET).
 _SPARQL_MINUS_TEXT = f"""
 SELECT ?cred ?issuer WHERE {{
   ?cred <{_IRI_ISSUER}> ?issuer .
@@ -829,26 +778,13 @@ SELECT ?cred ?issuer WHERE {{
 ORDER BY ?cred ?issuer OFFSET 5 LIMIT 50"""
 
 
-def _kg_sparql_minus(spark, sf_dir):
-    """MINUS + the OFFSET/LIMIT slice in the text surface (r8):
-    issued credentials that are NOT typed OverAgeTokenCredential.
-    The MINUS group shares ?cred with the outer pattern — the
-    CONNECTED case, where SPARQL 1.1 §8.3 MINUS and FILTER NOT EXISTS
-    coincide — so it compiles to the same single left_anti join
-    (operators/sparql.py routes it into match_bgp ``not_exists=``); a
-    disconnected MINUS is rejected loudly rather than silently
-    dropping everything.  ORDER BY over the unique (cred, issuer)
-    pairs makes the OFFSET 5 / LIMIT 50 slice deterministic; SPARQL
-    slice order (offset before limit) regardless of written order.
-    Oracle: both binding sets replayed in Python, the anti-join and
-    the slice stated in actual SQL (NOT EXISTS + LIMIT/OFFSET)."""
-    from cbor_ld_spark.operators.sparql import run_sparql
-    from cbor_ld_spark.plans import shared_triples
-
-    return run_sparql(shared_triples(spark, sf_dir),
-                      _SPARQL_MINUS_TEXT)
-
-
+# kg_sparql_subquery: SPARQL 1.1 §12 subqueries — issuers whose
+# credential count beats the all-issuer average.  A grouped subquery is
+# the base relation, a scalar subquery (itself over a nested grouped
+# subquery) is broadcast-cross-joined, and the outer FILTER over both
+# applies post-join; also ORDER BY DESC(?var) + an ascending key.
+# Oracle: the (cred, issuer) bindings replayed in Python; grouping,
+# average and comparison in SQL.
 _SPARQL_SUBQ_TEXT = f"""
 SELECT ?i ?n WHERE {{
   {{ SELECT ?i (COUNT(?c) AS ?n) WHERE {{ ?c <{_IRI_ISSUER}> ?i }}
@@ -861,24 +797,11 @@ SELECT ?i ?n WHERE {{
 ORDER BY DESC(?n) ?i"""
 
 
-def _kg_sparql_subquery(spark, sf_dir):
-    """SPARQL 1.1 §12 subqueries in the text surface (r8): issuers
-    whose credential count beats the all-issuer AVERAGE — a grouped
-    subquery (the per-issuer counts) as the base relation, a SCALAR
-    subquery (the average, itself over a nested grouped subquery)
-    broadcast-cross-joined (one row — BroadcastNestedLoop,
-    plan-tested), and an outer FILTER over both subqueries' projected
-    vars applied post-join.  Also exercises ORDER BY DESC(?var) + a
-    secondary ascending key.  Oracle: the (cred, issuer) bindings
-    replayed in Python; the grouping, the average and the comparison
-    stated in actual SQL."""
-    from cbor_ld_spark.operators.sparql import run_sparql
-    from cbor_ld_spark.plans import shared_triples
-
-    return run_sparql(shared_triples(spark, sf_dir),
-                      _SPARQL_SUBQ_TEXT)
-
-
+# kg_sparql_exists: FILTER EXISTS — issued credentials that ARE typed
+# OverAgeTokenCredential, the exact complement of kg_sparql_minus, as
+# one left_semi join (match_bgp ``exists=``).  The pair partitions the
+# issuer bindings: a semi/anti consistency signal.  Oracle: the
+# kg_sparql_minus replay with EXISTS for NOT EXISTS.
 _SPARQL_EXISTS_TEXT = f"""
 SELECT ?cred ?issuer WHERE {{
   ?cred <{_IRI_ISSUER}> ?issuer .
@@ -887,23 +810,12 @@ SELECT ?cred ?issuer WHERE {{
 ORDER BY ?cred ?issuer"""
 
 
-def _kg_sparql_exists(spark, sf_dir):
-    """FILTER EXISTS in the text surface (r8): issued credentials
-    that ARE typed OverAgeTokenCredential — the exact COMPLEMENT of
-    kg_sparql_minus over the same two binding sets, compiled to one
-    left_semi join (match_bgp ``exists=``, the positive twin of the
-    anti-join; plan-tested in tests/test_bgp.py).  Together the two
-    queries partition the issuer bindings, so a driver-green pair is
-    a semi/anti consistency signal, not just two row sets.  Oracle:
-    same replay as kg_sparql_minus with EXISTS instead of NOT
-    EXISTS."""
-    from cbor_ld_spark.operators.sparql import run_sparql
-    from cbor_ld_spark.plans import shared_triples
-
-    return run_sparql(shared_triples(spark, sf_dir),
-                      _SPARQL_EXISTS_TEXT)
-
-
+# kg_sparql_union_join: UNION composing with other WHERE members — each
+# typed OverAgeTokenCredential paired with its issuer OR its subject
+# (``?s a T . {A} UNION {B}``).  The union frame joins the typed
+# bindings on ?cred; every branch must bind the join var (checked
+# statically, otherwise rejected).  Oracle: the three binding sets
+# replayed in Python; UNION and join in SQL.
 _SPARQL_UNION_JOIN_TEXT = f"""
 SELECT ?cred ?who WHERE {{
   ?cred <{_IRI_RDF_TYPE}> <{_IRI_OVERAGE_TYPE}> .
@@ -913,23 +825,13 @@ SELECT ?cred ?who WHERE {{
 ORDER BY ?cred ?who"""
 
 
-def _kg_sparql_union_join(spark, sf_dir):
-    """UNION composing with other WHERE members (r8): each typed
-    OverAgeTokenCredential paired with its issuer OR its credential
-    subject — the canonical ``?s a T . {{A}} UNION {{B}}`` shape the
-    previous only-member restriction rejected.  The union frame (two
-    pred-pushed scans + unionByName) joins the typed bindings on the
-    shared ?cred; every branch binds the join var (checked statically
-    — a branch that does not would hit SPARQL's unbound-compatibility
-    corner, rejected loudly).  Oracle: the three binding sets replayed
-    in Python; the UNION and the join stated in actual SQL."""
-    from cbor_ld_spark.operators.sparql import run_sparql
-    from cbor_ld_spark.plans import shared_triples
-
-    return run_sparql(shared_triples(spark, sf_dir),
-                      _SPARQL_UNION_JOIN_TEXT)
-
-
+# kg_sparql_builtins: §17 built-ins in FILTER — did:key-issued urn:uuid
+# credentials that carry an issuanceDate.  STRSTARTS / REGEX / BOUND /
+# && become startswith / rlike / isnotnull / AND
+# (operators/sparql._devar); BOUND over an OPTIONAL-introduced var
+# defers past the left join (§18.5) while the other conjuncts keep
+# their pushdown.  Oracle: issuer and issuance bindings replayed in
+# Python; starts_with / regexp_matches / EXISTS in SQL.
 _SPARQL_BUILTINS_TEXT = f"""
 SELECT ?cred ?issuer WHERE {{
   ?cred <{_IRI_ISSUER}> ?issuer .
@@ -940,23 +842,12 @@ SELECT ?cred ?issuer WHERE {{
 ORDER BY ?cred ?issuer"""
 
 
-def _kg_sparql_builtins(spark, sf_dir):
-    """SPARQL 1.1 §17 built-ins in FILTER (r8): did:key-issued
-    urn:uuid credentials that carry an issuanceDate — STRSTARTS /
-    REGEX / BOUND and && translated to Spark SQL (startswith / rlike /
-    isnotnull / AND, operators/sparql._devar), with the BOUND filter
-    over an OPTIONAL-introduced variable deferring past the left join
-    (SPARQL §18.5 group scoping) while the other conjuncts keep their
-    pushdown.  Oracle: the (cred, issuer) and issuance bindings
-    replayed in Python; starts_with / regexp_matches / EXISTS stated
-    in actual SQL."""
-    from cbor_ld_spark.operators.sparql import run_sparql
-    from cbor_ld_spark.plans import shared_triples
-
-    return run_sparql(shared_triples(spark, sf_dir),
-                      _SPARQL_BUILTINS_TEXT)
-
-
+# kg_sparql_group_concat: GROUP_CONCAT and SAMPLE — per-issuer
+# credential roster.  GROUP_CONCAT compiles to
+# array_join(sort_array(collect_list(..)), ..) (sorted: a documented
+# divergence from SPARQL's unspecified order) and SAMPLE to min; those
+# determinism choices make a value-hash oracle possible.  Oracle:
+# DuckDB string_agg(.. ORDER BY ..) + min over the replayed bindings.
 _SPARQL_GROUP_CONCAT_TEXT = f"""
 SELECT ?issuer (GROUP_CONCAT(?cred; SEPARATOR="|") AS ?creds)
        (SAMPLE(?cred) AS ?one) (COUNT(?cred) AS ?n)
@@ -964,22 +855,12 @@ WHERE {{ ?cred <{_IRI_ISSUER}> ?issuer }}
 GROUP BY ?issuer ORDER BY ?issuer"""
 
 
-def _kg_sparql_group_concat(spark, sf_dir):
-    """GROUP_CONCAT and SAMPLE aggregates (r8): per-issuer credential
-    roster — GROUP_CONCAT(?c; SEPARATOR=..) compiles to
-    array_join(sort_array(collect_list(..)), ..) (deterministic sorted
-    order, a documented divergence from SPARQL's unspecified order)
-    and SAMPLE to min (a deterministic pick of SPARQL's 'arbitrary
-    value').  Oracle: DuckDB string_agg(.. ORDER BY ..) + min over the
-    replayed bindings — the determinism choices are exactly what make
-    a value-hash oracle possible for these aggregates."""
-    from cbor_ld_spark.operators.sparql import run_sparql
-    from cbor_ld_spark.plans import shared_triples
-
-    return run_sparql(shared_triples(spark, sf_dir),
-                      _SPARQL_GROUP_CONCAT_TEXT)
-
-
+# kg_sparql_optional_path: a property path inside OPTIONAL — every
+# issued credential left-joined with its subject's overAge value.  The
+# subject/overAge sequence evaluates as a path relation and left-joins
+# like an optional pattern frame, so credentials without one keep ?age
+# unbound (NULL).  Oracle: issuer / subject / overAge bindings replayed
+# in Python; path join and LEFT JOIN in SQL.
 _SPARQL_OPT_PATH_TEXT = f"""
 SELECT ?cred ?issuer ?age WHERE {{
   ?cred <{_IRI_ISSUER}> ?issuer .
@@ -988,22 +869,13 @@ SELECT ?cred ?issuer ?age WHERE {{
 ORDER BY ?cred ?issuer ?age"""
 
 
-def _kg_sparql_optional_path(spark, sf_dir):
-    """Property path inside OPTIONAL (r8): every issued credential,
-    left-joined with the overAge value its credentialSubject carries —
-    the subject/overAge SEQUENCE path evaluates as a path relation and
-    left-joins like an optional pattern frame, so credentials whose
-    subject has no overAge row surface with ?age unbound (NULL)
-    instead of dropping.  Oracle: the issuer / subject / overAge
-    binding sets replayed in Python; the path join and the LEFT JOIN
-    stated in actual SQL."""
-    from cbor_ld_spark.operators.sparql import run_sparql
-    from cbor_ld_spark.plans import shared_triples
-
-    return run_sparql(shared_triples(spark, sf_dir),
-                      _SPARQL_OPT_PATH_TEXT)
-
-
+# kg_sparql_graph: the §13.3 GRAPH clause over the credential proof
+# graphs (JSON-LD @graph containers realize as named graphs; '' marks
+# the default graph).  Both patterns carry ?g, so purpose and creation
+# time must match inside the SAME named graph; default-graph triples
+# are excluded.  Oracle: (graph, subj, obj) quad bindings for both
+# predicates replayed in Python; the co-location join over (proof, g)
+# in SQL.
 _SPARQL_GRAPH_TEXT = f"""
 SELECT ?g ?proof ?purp ?created WHERE {{
   GRAPH ?g {{ ?proof <{_IRI_PROOF_PURPOSE}> ?purp .
@@ -1012,23 +884,13 @@ SELECT ?g ?proof ?purp ?created WHERE {{
 ORDER BY ?g ?proof ?purp ?created"""
 
 
-def _kg_sparql_graph(spark, sf_dir):
-    """SPARQL §13.3 GRAPH clause (r8): the credential PROOF graphs —
-    JSON-LD @graph containers realize as NAMED graphs in the triples
-    frame ('' marks the default graph) — with each proof's purpose and
-    creation time CO-LOCATED: both patterns carry the shared ?g quad
-    term, so they must match inside the SAME named graph (the
-    GRAPH-semantics hard signal; the default-graph triples are
-    excluded by construction).  Oracle: the (graph, subj, obj) quad
-    bindings for both predicates replayed in Python; the co-location
-    join stated in actual SQL over (proof, g)."""
-    from cbor_ld_spark.operators.sparql import run_sparql
-    from cbor_ld_spark.plans import shared_triples
-
-    return run_sparql(shared_triples(spark, sf_dir),
-                      _SPARQL_GRAPH_TEXT)
-
-
+# kg_sparql_optional_group: OPTIONAL group unit semantics (§18.5
+# LeftJoin) — each issued credential with its subject AND the subject's
+# overAge value, bound only when the whole two-pattern group matches; a
+# subject without overAge binds neither ?person nor ?age (unlike
+# kg_sparql_optional_path, which projects only the path's endpoint).
+# Oracle: the three binding sets replayed in Python; the group as a
+# JOIN inside a LEFT JOIN in SQL.
 _SPARQL_OPT_GROUP_TEXT = f"""
 SELECT ?cred ?issuer ?person ?age WHERE {{
   ?cred <{_IRI_ISSUER}> ?issuer .
@@ -1038,43 +900,16 @@ SELECT ?cred ?issuer ?person ?age WHERE {{
 ORDER BY ?cred ?issuer ?person ?age"""
 
 
-def _kg_sparql_optional_group(spark, sf_dir):
-    """OPTIONAL group UNIT semantics (r8, SPARQL §18.5 LeftJoin): each
-    issued credential with its subject AND the subject's overAge value
-    — bound only when the WHOLE two-pattern group matches.  A
-    credential whose subject carries no overAge row binds NEITHER
-    ?person nor ?age (the flattened per-pattern reading would leak
-    ?person — this query is the unit-semantics hard signal, and
-    differs from kg_sparql_optional_path, which projects only the
-    path's endpoint).  Oracle: the three binding sets replayed in
-    Python; the group as a JOIN inside a LEFT JOIN in actual SQL."""
-    from cbor_ld_spark.operators.sparql import run_sparql
-    from cbor_ld_spark.plans import shared_triples
-
-    return run_sparql(shared_triples(spark, sf_dir),
-                      _SPARQL_OPT_GROUP_TEXT)
-
-
+# kg_sparql_describe: the DESCRIBE form — every outgoing (subj, pred,
+# obj) triple of the OverAgeTokenCredential nodes via one semi join
+# against the WHERE bindings (§16.4 leaves the description
+# implementation-defined; this engine emits one-hop outgoing arcs).
+# Oracle: the typed set and the distinct realized triples replayed in
+# Python; the semi join as IN in SQL.
 _SPARQL_DESCRIBE_TEXT = f"""
 DESCRIBE ?cred WHERE {{
   ?cred <{_IRI_RDF_TYPE}> <{_IRI_OVERAGE_TYPE}>
 }}"""
-
-
-def _kg_sparql_describe(spark, sf_dir):
-    """DESCRIBE query form (r8) — completes the SPARQL quartet
-    (SELECT/ASK/CONSTRUCT/DESCRIBE): every outgoing (subj, pred, obj)
-    triple of the OverAgeTokenCredential nodes, via one semi join of
-    the triples frame against the WHERE group's bindings (SPARQL
-    §16.4 leaves the description form implementation-defined; this
-    engine emits one-hop outgoing arcs, documented).  Oracle: the
-    typed set and the full distinct realized triple set replayed in
-    Python; the semi join stated as IN in actual SQL."""
-    from cbor_ld_spark.operators.sparql import run_sparql
-    from cbor_ld_spark.plans import shared_triples
-
-    return run_sparql(shared_triples(spark, sf_dir),
-                      _SPARQL_DESCRIBE_TEXT)
 
 
 def _kg_path_alt_groups(spark, sf_dir):
@@ -1126,8 +961,6 @@ def _kg_path_issuers(spark, sf_dir):
 
     out = match_path(shared_triples(spark, sf_dir), _PATH_ISSUER_STEPS)
     return out.orderBy("src", "dst")
-
-
 
 
 def _kg_path_truage_issuer(spark, sf_dir):
@@ -1285,7 +1118,7 @@ def _stream_windowed_parity(spark, sf_dir):
         F.timestamp_seconds(
             F.lit(_WIN_EPOCH) + (doc_id * 137) % _WIN_SPAN))
     from cbor_ld_spark.plans.partitioning import parquet_rows
-    from cbor_ld_spark.streaming.tuning import scoped_state_partitions
+    from cbor_ld_spark.streaming.tuning import state_session
 
     base = tempfile.mkdtemp(prefix="kgwinparity_")
     inp, out, ckpt = (os.path.join(base, d) for d in ("in", "out", "ckpt"))
@@ -1294,25 +1127,23 @@ def _stream_windowed_parity(spark, sf_dir):
         # state scales with open windows x repos, bounded by corpus
         # rows: size the state stores to that, not to the core count
         # (streaming/tuning.py — measured 5.4-9.7 s -> 3.0-3.5 s)
-        n_rows = parquet_rows(f"{sf_dir}/documents.parquet")
-        with scoped_state_partitions(spark, n_rows):
-            stream_windowed_health(spark, inp, out, ckpt,
-                                   window="1 hour",
-                                   watermark="2 hours").awaitTermination(600)
-            # sentinel: max event time 12h pushes the watermark to 10h,
-            # past every data window end (<= 4h); its own window never
-            # finalizes
-            spark.createDataFrame(
-                [("zz/sentinel", "p", "c", "txt", "x")],
-                "repo string, path string, commit string, lang string, "
-                "content string"
-            ).withColumn(
-                "event_ts",
-                F.timestamp_seconds(F.lit(_WIN_EPOCH + 12 * 3600))
-            ).write.mode("append").parquet(inp)
-            stream_windowed_health(spark, inp, out, ckpt,
-                                   window="1 hour",
-                                   watermark="2 hours").awaitTermination(600)
+        s = state_session(
+            spark, parquet_rows(f"{sf_dir}/documents.parquet"))
+        stream_windowed_health(s, inp, out, ckpt, window="1 hour",
+                               watermark="2 hours").awaitTermination(600)
+        # sentinel: max event time 12h pushes the watermark to 10h,
+        # past every data window end (<= 4h); its own window never
+        # finalizes
+        spark.createDataFrame(
+            [("zz/sentinel", "p", "c", "txt", "x")],
+            "repo string, path string, commit string, lang string, "
+            "content string"
+        ).withColumn(
+            "event_ts",
+            F.timestamp_seconds(F.lit(_WIN_EPOCH + 12 * 3600))
+        ).write.mode("append").parquet(inp)
+        stream_windowed_health(s, inp, out, ckpt, window="1 hour",
+                               watermark="2 hours").awaitTermination(600)
         rows = (spark.read.parquet(out)
                 .filter(F.col("repo") != "zz/sentinel")
                 .select(F.col("window_start").cast("long")
@@ -1726,15 +1557,14 @@ def _stream_sessions_parity(spark, sf_dir):
     inp, out, ckpt = (os.path.join(base, d) for d in ("in", "out", "ckpt"))
     try:
         from cbor_ld_spark.plans.partitioning import parquet_rows
-        from cbor_ld_spark.streaming.tuning import scoped_state_partitions
+        from cbor_ld_spark.streaming.tuning import state_session
 
         ev.write.parquet(inp)
-        stream = spark.readStream.schema(ev.schema).parquet(inp)
         # state = one entry per user: size the state stores to the
         # input volume, not the core count (streaming/tuning.py)
-        with scoped_state_partitions(
-                spark, parquet_rows(f"{sf_dir}/events.parquet")):
-            session_stream(stream, ckpt, out).awaitTermination(600)
+        s = state_session(spark, parquet_rows(f"{sf_dir}/events.parquet"))
+        stream = s.readStream.schema(ev.schema).parquet(inp)
+        session_stream(stream, ckpt, out).awaitTermination(600)
         closed = spark.read.parquet(out).select(
             "user_id", F.col("session_seq").alias("seq"), "n_events",
             "start_tl", "duration_secs", "value_milli")
@@ -1810,15 +1640,15 @@ def _stream_dedup_parity(spark, sf_dir):
         (docs.filter(F.col("doc_id") % 2 == 1).coalesce(1)
          .write.mode("append").parquet(inp))
         from cbor_ld_spark.plans.partitioning import parquet_rows
-        from cbor_ld_spark.streaming.tuning import scoped_state_partitions
+        from cbor_ld_spark.streaming.tuning import state_session
 
-        stream = (spark.readStream.schema(docs.schema)
-                  .option("maxFilesPerTrigger", "1").parquet(inp))
         # dedup state = one hash per distinct content: size the state
         # stores to the input volume, not the core count
-        with scoped_state_partitions(
-                spark, parquet_rows(f"{sf_dir}/documents.parquet")):
-            stream_dedup_keep_first(stream, out, ckpt).awaitTermination(600)
+        s = state_session(spark,
+                          parquet_rows(f"{sf_dir}/documents.parquet"))
+        stream = (s.readStream.schema(docs.schema)
+                  .option("maxFilesPerTrigger", "1").parquet(inp))
+        stream_dedup_keep_first(stream, out, ckpt).awaitTermination(600)
         kept = spark.read.parquet(out)
         n_total = docs.count()
         n_distinct = (docs.select(F.md5(_norm(F.col("text"))).alias("h"))
@@ -2034,52 +1864,15 @@ def _events_by_type(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordering matters: the driver's correctness harness checks the FIRST 50
-    # entries in registry order.  STANDING RULE (r6+): any NEW query lands
-    # INSIDE slot 50 in the same commit that adds it, demoting a long-stable
-    # single to the tail — so every operator earns a hard-signal driver row
-    # the round it ships.  ROTATION RULE (r7+, VERDICT r6 #8): each round,
-    # ~10 stable tail queries whose last driver row is >=3 rounds old swap
-    # back into the window in place of now-proven recent additions, so every
-    # registry query re-earns a driver row at least every ~4 rounds.
-    # Window exits this round — r8 (all driver-green r7, operator code
-    # untouched in r8, still value-verified by the committed three-SF
-    # self-run): rel_* x8, events_by_type, events_sessions,
-    # kg_hex_roundtrip, emb_near_dup, dedup_minhash_pairs,
-    # ann_cosine_topk, kg_pagerank_dangling, kg_pagerank_weighted,
-    # kg_pred_cooccurrence, ann_pq_topk, kg_degree_distribution,
-    # kg_triangles, kg_neighbor_overlap, kg_pagerank, events_retention,
-    # kg_khop, stream_dedup_parity, kg_canonical_dedup,
-    # dedup_incremental (27).  Window entries: the 15 NEW r8 queries
-    # (kg_sparql_minus — MINUS + OFFSET/LIMIT slice, NOT EXISTS +
-    # slice oracle; kg_sparql_subquery — SPARQL 1.1 §12 grouped +
-    # scalar + nested subqueries, post-join FILTER, ORDER BY DESC;
-    # kg_sparql_exists — FILTER EXISTS left_semi, the complement of
-    # kg_sparql_minus; kg_sparql_union_join — UNION composing with
-    # other WHERE members, union-then-join oracle; kg_sparql_builtins
-    # — §17 built-ins translated to Spark SQL, BOUND over an OPTIONAL
-    # var deferring past the left join; kg_sparql_group_concat —
-    # GROUP_CONCAT/SAMPLE with deterministic order/pick;
-    # kg_sparql_optional_path — a sequence path inside OPTIONAL
-    # left-joining as a path relation; kg_sparql_graph — §13.3 GRAPH
-    # quads over the named proof graphs, co-location join;
-    # kg_sparql_optional_group — §18.5 LeftJoin UNIT semantics, the
-    # whole group binds or nothing does; kg_sparql_describe — the
-    # DESCRIBE form, outgoing-arc semi join) plus
-    # (kg_sparql_bind — BIND derived column; kg_sparql_values —
-    # binding-introducing inline data, FROM (VALUES) oracle;
-    # kg_sparql_construct — text CONSTRUCT, shares kg_infer_vouches'
-    # oracle; kg_sparql_ask — ASK over a both-ground path, the
-    # meet-in-the-middle tier; kg_path_alt_groups — alternation of
-    # path groups, shares kg_path_issuers' oracle) + 12 rotations
-    # whose last driver row was r5 (dedup_apply, text_oov_rate,
-    # kg_obj_datatypes, kg_ppr, kg_hits, kg_reachability,
-    # kg_communities, kg_neighbor_overlap_lsh, kg_anf,
-    # kg_nquads_export, kg_infer_vouches, dedup_minhash_jaccard) —
-    # VERDICT r7 #3.  Queries whose operators WERE touched in r8
-    # (bgp.py paths/bidi/binds, sparql.py, rules.py, pipeline.py) all
-    # stay in-window: kg_bgp_*, kg_sparql_*, kg_path_*,
-    # kg_infer_semi_naive, kg_infer_vouches, kg_canonical_dedup.
+    # Ordering matters: the driver's correctness harness checks the FIRST
+    # 50 entries in registry order.  Any NEW query lands inside slot 50
+    # in the commit that adds it, demoting a long-stable entry to the
+    # tail, so every operator earns a hard-signal driver row when it
+    # ships.  Rotation: each round ~10 stable tail queries whose last
+    # driver row is >=3 rounds old swap back into the window in place of
+    # proven recent additions, so every query re-earns a driver row at
+    # least every ~4 rounds; queries whose operator code changed stay
+    # in the window.
     return {
         "kg_corpus_shape": _kg_corpus_shape,
         "kg_doc_results": _kg_doc_results,
@@ -2097,28 +1890,30 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kg_bgp_optional": _kg_bgp_optional,
         "kg_infer_semi_naive": _kg_infer_semi_naive,
         "kg_bgp_filter": _kg_bgp_filter,
-        "kg_sparql_select": _kg_sparql_select,
-        "kg_sparql_group": _kg_sparql_group,
-        "kg_sparql_path_type": _kg_sparql_path_type,
+        "kg_sparql_select": _sparql_query(
+            _SPARQL_SELECT_TEXT, "cred", "issuer", "issued"),
+        "kg_sparql_group": _sparql_query(_SPARQL_GROUP_TEXT),
+        "kg_sparql_path_type": _sparql_query(
+            _SPARQL_PATH_TYPE_TEXT, "cred", "t"),
         "kg_anf_diameter": _kg_anf_diameter,
         "kg_path_closure": _kg_path_closure,
         "kg_path_issuers": _kg_path_issuers,
         "kg_bgp_group": _kg_bgp_group,
-        "kg_sparql_bind": _kg_sparql_bind,
-        "kg_sparql_values": _kg_sparql_values,
+        "kg_sparql_bind": _sparql_query(_SPARQL_BIND_TEXT),
+        "kg_sparql_values": _sparql_query(_SPARQL_VALUES_TEXT),
         "kg_sparql_construct": _kg_sparql_construct,
-        "kg_sparql_ask": _kg_sparql_ask,
+        "kg_sparql_ask": _sparql_query(_SPARQL_ASK_TEXT),
         "kg_path_alt_groups": _kg_path_alt_groups,
-        "kg_sparql_minus": _kg_sparql_minus,
-        "kg_sparql_subquery": _kg_sparql_subquery,
-        "kg_sparql_exists": _kg_sparql_exists,
-        "kg_sparql_union_join": _kg_sparql_union_join,
-        "kg_sparql_builtins": _kg_sparql_builtins,
-        "kg_sparql_group_concat": _kg_sparql_group_concat,
-        "kg_sparql_optional_path": _kg_sparql_optional_path,
-        "kg_sparql_graph": _kg_sparql_graph,
-        "kg_sparql_optional_group": _kg_sparql_optional_group,
-        "kg_sparql_describe": _kg_sparql_describe,
+        "kg_sparql_minus": _sparql_query(_SPARQL_MINUS_TEXT),
+        "kg_sparql_subquery": _sparql_query(_SPARQL_SUBQ_TEXT),
+        "kg_sparql_exists": _sparql_query(_SPARQL_EXISTS_TEXT),
+        "kg_sparql_union_join": _sparql_query(_SPARQL_UNION_JOIN_TEXT),
+        "kg_sparql_builtins": _sparql_query(_SPARQL_BUILTINS_TEXT),
+        "kg_sparql_group_concat": _sparql_query(_SPARQL_GROUP_CONCAT_TEXT),
+        "kg_sparql_optional_path": _sparql_query(_SPARQL_OPT_PATH_TEXT),
+        "kg_sparql_graph": _sparql_query(_SPARQL_GRAPH_TEXT),
+        "kg_sparql_optional_group": _sparql_query(_SPARQL_OPT_GROUP_TEXT),
+        "kg_sparql_describe": _sparql_query(_SPARQL_DESCRIBE_TEXT),
         "kg_infer_vouches": _kg_infer_vouches,
         "dedup_apply": _dedup_apply,
         "text_oov_rate": _text_oov_rate,
@@ -2308,7 +2103,7 @@ def _canon_tuples(content):
     from cbor_ld_spark.functions.udfs import _process_one
     from cbor_ld_spark.operators.canonicalize import _canonicalize_doc
 
-    r = _process_one(content, 1, True)
+    r = _process_one(content, 1)
     if not r[1] or r[7] == 0:
         return None
     trips = list(zip(r[8], r[9], r[10], r[11], r[14]))
@@ -2341,9 +2136,8 @@ def _variant_outcomes():
     for i, (_name, lang, content, _enc) in enumerate(payload_variants()):
         if not _sniff_ok(lang, content):
             continue
-        a = _process_one(content, 1, True)
-        b = _process_one(content.replace(_TEMPLATE_UUID, _PROBE_UUID),
-                         1, True)
+        a = _process_one(content, 1)
+        b = _process_one(content.replace(_TEMPLATE_UUID, _PROBE_UUID), 1)
         ok, error_kind, rt = a[1], a[3], a[6]
         assert (a[1], a[3], a[6], a[7]) == (b[1], b[3], b[6], b[7]), \
             f"variant {i}: outcome depends on entity uuid"
@@ -3329,7 +3123,7 @@ def _compression_stats_oracle() -> str:
     for i, (name, lang, content, _enc) in enumerate(variants):
         if not _sniff_ok(lang, content):
             continue
-        out = _process_one(content, 1, True)
+        out = _process_one(content, 1)
         if out[1]:
             rows.append(f"({i}, {_sql_str(name)}, {out[4]}, {out[5]})")
     vals = ", ".join(rows)
@@ -3381,7 +3175,7 @@ def _realized_entity_edges(sf_dir: str) -> list[tuple[str, str]]:
             continue
         h = hashlib.md5(f"ent:{e}".encode()).hexdigest()
         uuid = f"{h[:8]}-{h[8:12]}-{h[12:16]}-{h[16:20]}-{h[20:32]}"
-        out = _process_one(content.replace(_TEMPLATE_UUID, uuid), 1, True)
+        out = _process_one(content.replace(_TEMPLATE_UUID, uuid), 1)
         if out[1] and out[7]:
             for s, o, is_iri in zip(out[8], out[10], out[11]):
                 if is_iri:
@@ -3440,7 +3234,7 @@ def _realized_quads(sf_dir: str) -> list[tuple]:
             continue
         h = hashlib.md5(f"ent:{e}".encode()).hexdigest()
         uuid = f"{h[:8]}-{h[8:12]}-{h[12:16]}-{h[16:20]}-{h[20:32]}"
-        out = _process_one(content.replace(_TEMPLATE_UUID, uuid), 1, True)
+        out = _process_one(content.replace(_TEMPLATE_UUID, uuid), 1)
         if out[1] and out[7]:
             for row in zip(out[8], out[9], out[10], out[11], out[12],
                            out[13], out[14]):
@@ -4023,7 +3817,7 @@ def _pred_cooccurrence_oracle(sf_dir: str | None = None) -> str:
             continue
         h = hashlib.md5(f"ent:{e}".encode()).hexdigest()
         uuid = f"{h[:8]}-{h[8:12]}-{h[12:16]}-{h[16:20]}-{h[20:32]}"
-        out = _process_one(content.replace(_TEMPLATE_UUID, uuid), 1, True)
+        out = _process_one(content.replace(_TEMPLATE_UUID, uuid), 1)
         if out[1] and out[7]:
             for s, p in zip(out[8], out[9]):
                 preds_of[s].add(p)
@@ -4069,7 +3863,7 @@ def _realized_entity_edge_weights(sf_dir: str) -> list[tuple[str, str, int]]:
             continue
         h = hashlib.md5(f"ent:{e}".encode()).hexdigest()
         uuid = f"{h[:8]}-{h[8:12]}-{h[12:16]}-{h[16:20]}-{h[20:32]}"
-        out = _process_one(content.replace(_TEMPLATE_UUID, uuid), 1, True)
+        out = _process_one(content.replace(_TEMPLATE_UUID, uuid), 1)
         if out[1] and out[7]:
             for s, o, is_iri in zip(out[8], out[10], out[11]):
                 if is_iri:
@@ -4302,7 +4096,7 @@ def _obj_datatypes_oracle(sf_dir: str | None = None) -> str:
             continue
         h = hashlib.md5(f"ent:{e}".encode()).hexdigest()
         uuid = f"{h[:8]}-{h[8:12]}-{h[12:16]}-{h[16:20]}-{h[20:32]}"
-        out = _process_one(content.replace(_TEMPLATE_UUID, uuid), 1, True)
+        out = _process_one(content.replace(_TEMPLATE_UUID, uuid), 1)
         if out[1] and out[7]:
             for is_iri, dt in zip(out[11], out[12]):
                 kind = "iri" if is_iri else "literal"

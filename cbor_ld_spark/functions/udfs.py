@@ -104,10 +104,13 @@ def jsonld_sniff(lang: Column | None = None) -> Column:
     return pred
 
 
-def _process_one(content: str, registry_id: int, emit_triples: bool):
+def _process_one(content: str, registry_id: int, _unused=None):
     """Per-document kernel: returns a result tuple (never raises).
 
     Tuple layout matches DOC_RESULT_SCHEMA from ``doc_sha`` onward.
+    Expansion always runs, so ``ok`` is False for a document whose
+    expansion raises.  The ignored third parameter keeps the frozen
+    ``bench.py`` kernel timing call ``_process_one(c, 1, True)`` working.
     """
     from cbor_ld_spark.kernel import (
         CborLdError,
@@ -121,8 +124,6 @@ def _process_one(content: str, registry_id: int, emit_triples: bool):
     doc_sha = None
     cbor_len = None
     roundtrip_ok = None
-    tcols = (None,) * 7
-    n_triples = 0
     # compute once, outside try: len() in an except handler would itself
     # raise for null/non-str content and kill the partition
     clen = len(content) if isinstance(content, str) else 0
@@ -138,28 +139,25 @@ def _process_one(content: str, registry_id: int, emit_triples: bool):
         cbor_len = len(cbor)
         back = decode_document(cbor)
         roundtrip_ok = content_sha256(back) == doc_sha
-        if emit_triples:
-            triples = expand_to_triples(doc)
-            prefix = f"_:{doc_sha[:16]}_"
-            subj, pred, obj, is_iri, dt, lang, graph = [], [], [], [], [], [], []
-            for t in triples:
-                # every blank label (minted _:bN and remapped user _:u_*)
-                # gets the doc-sha prefix: cross-document uniqueness
-                subj.append(prefix + t.subj[2:] if t.subj.startswith("_:")
-                            else t.subj)
-                pred.append(t.pred)
-                obj.append(prefix + t.obj[2:]
-                           if t.obj_is_iri and t.obj.startswith("_:")
-                           else t.obj)
-                is_iri.append(t.obj_is_iri)
-                dt.append(t.obj_datatype)
-                lang.append(t.obj_lang)
-                graph.append(prefix + t.graph[2:]
-                             if t.graph.startswith("_:") else t.graph)
-            tcols = (subj, pred, obj, is_iri, dt, lang, graph)
-            n_triples = len(triples)
-        return (doc_sha, True, None, None, clen, cbor_len,
-                roundtrip_ok, n_triples, *tcols)
+        triples = expand_to_triples(doc)
+        prefix = f"_:{doc_sha[:16]}_"
+        subj, pred, obj, is_iri, dt, lang, graph = [], [], [], [], [], [], []
+        for t in triples:
+            # every blank label (minted _:bN and remapped user _:u_*)
+            # gets the doc-sha prefix: cross-document uniqueness
+            subj.append(prefix + t.subj[2:] if t.subj.startswith("_:")
+                        else t.subj)
+            pred.append(t.pred)
+            obj.append(prefix + t.obj[2:]
+                       if t.obj_is_iri and t.obj.startswith("_:")
+                       else t.obj)
+            is_iri.append(t.obj_is_iri)
+            dt.append(t.obj_datatype)
+            lang.append(t.obj_lang)
+            graph.append(prefix + t.graph[2:]
+                         if t.graph.startswith("_:") else t.graph)
+        return (doc_sha, True, None, None, clen, cbor_len, roundtrip_ok,
+                len(triples), subj, pred, obj, is_iri, dt, lang, graph)
     except CborLdError as e:
         return (doc_sha, False, e.message or e.kind, e.kind, clen,
                 cbor_len, roundtrip_ok, 0, *((None,) * 7))
@@ -190,8 +188,7 @@ def _pa_result_types():
     }
 
 
-def kg_process_batches(registry_id: int = 1, emit_triples: bool = True,
-                       with_provenance: bool = False):
+def kg_process_batches(registry_id: int = 1, with_provenance: bool = False):
     """mapInArrow kernel fn (Arrow RecordBatch in/out, no pandas).
 
     Building output columns with ``pa.array`` directly is measurably
@@ -214,7 +211,7 @@ def kg_process_batches(registry_id: int = 1, emit_triples: bool = True,
         types = _pa_result_types()
         schema = pa.schema([(n, types[n]) for n in cols])
         for batch in batches:
-            results = [_process_one(c, registry_id, emit_triples)
+            results = [_process_one(c, registry_id)
                        for c in batch.column("content").to_pylist()]
             arrays = [
                 pa.array([r[result_idx[c]] for r in results], type=types[c])

@@ -38,7 +38,6 @@ DOC_COLUMNS = [f.name for f in DOC_RESULT_SCHEMA.fields
 
 
 def process_corpus(repos: DataFrame, registry_id: int = 1,
-                   emit_triples: bool = True,
                    dedup_content: bool = True) -> DataFrame:
     """repos(repo,path,commit,lang,content) -> per-document KG results.
 
@@ -60,8 +59,7 @@ def process_corpus(repos: DataFrame, registry_id: int = 1,
     if dedup_content:
         from cbor_ld_spark.plans.partitioning import spread_input
 
-        fn = kg_process_batches(registry_id=registry_id,
-                                emit_triples=emit_triples)
+        fn = kg_process_batches(registry_id=registry_id)
         # hash-repartition on the dedup key with an EXPLICIT count, then
         # dropDuplicates: one exchange total (the aggregation reuses the
         # partitioning), and AQE's byte-based coalescer cannot fold the
@@ -74,8 +72,7 @@ def process_corpus(repos: DataFrame, registry_id: int = 1,
         results = distinct.mapInArrow(fn, schema=KERNEL_RESULT_SCHEMA)
         return candidates.drop("content").join(results, "content_sha") \
             .select(*[f.name for f in DOC_RESULT_SCHEMA.fields])
-    fn = kg_process_batches(registry_id=registry_id,
-                            emit_triples=emit_triples, with_provenance=True)
+    fn = kg_process_batches(registry_id=registry_id, with_provenance=True)
     return candidates.mapInArrow(fn, schema=DOC_RESULT_SCHEMA)
 
 

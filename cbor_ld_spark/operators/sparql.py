@@ -220,8 +220,9 @@ def parse_path(expr: str) -> list[tuple]:
 #              — declared prefixed names expand token-wise to full
 #              <iri>s (patterns, paths, VALUES data; quoted literals
 #              and undeclared colon tokens like urn:/did: untouched;
-#              prefixed names inside FILTER/BIND SQL bodies are NOT
-#              expanded — use full IRIs as string literals there).
+#              prefixed names inside FILTER/BIND/HAVING, '(expr AS
+#              ?v)' and ORDER BY expression bodies are NOT expanded —
+#              use full IRIs as string literals there).
 #              'a' in predicate position is rdf:type (SPARQL §4.2.4).
 # select-q := 'SELECT' (('DISTINCT'|'REDUCED')? item+ | '*')
 #             'WHERE' group
@@ -772,6 +773,9 @@ def _parse_values_block(toks: list[str], pos: int):
     return vars_, rows, pos + 1
 
 
+_SELECT_AS = _re.compile(r"\s+AS\s+\?\w+\s*\)$", _re.IGNORECASE)
+
+
 def parse_sparql(text: str) -> dict:
     """Parse a SPARQL query (subset above) into an execution spec:
     ``{"form", "select", "aggs", "template", "patterns", "optional",
@@ -805,25 +809,27 @@ def parse_sparql(text: str) -> dict:
         prefixes[name[:-1]] = iri[1:-1]
         toks = toks[3:]
     if prefixes:
-        # FILTER/BIND/HAVING bodies are SQL expressions, not term
-        # positions: the grammar documents prefixed names there as NOT
-        # expanded, and an expanded '<iri>' inside an expression body
-        # would only surface later as an opaque AnalysisException — so
-        # leave those tokens (and a '(...)' token right after the bare
-        # keyword) untouched
-        _expr_kw = ("filter", "bind", "having")
-        expanded, skip_next = [], False
+        # FILTER/BIND/HAVING bodies, '(expr AS ?v)' select items and
+        # ORDER BY '(expr)' / DESC(..) / ASC(..) keys are SQL
+        # expressions, not term positions: the grammar documents
+        # prefixed names there as NOT expanded, and an expanded '<iri>'
+        # inside an expression body would only surface later as an
+        # opaque AnalysisException — so leave those tokens (and a
+        # '(...)' token right after a bare keyword or inside a BY key
+        # list) untouched
+        _expr_kw = ("filter", "bind", "having", "desc", "asc")
+        expanded, after_kw, in_keys = [], False, False
         for t in toks:
             low = t.lower()
-            if skip_next and t.startswith("("):
-                expanded.append(t)
-                skip_next = False
-                continue
-            skip_next = low in _expr_kw
-            if any(low.startswith(k + "(") for k in _expr_kw):
-                expanded.append(t)
-            else:
-                expanded.append(_expand_prefixed(t, prefixes))
+            paren = t.startswith("(")
+            verbatim = (
+                paren and (after_kw or in_keys or bool(_SELECT_AS.search(t)))
+                or any(low.startswith(k + "(") for k in _expr_kw))
+            in_keys = low == "by" or in_keys and (
+                verbatim or t.startswith("?"))
+            after_kw = low in _expr_kw
+            expanded.append(t if verbatim
+                            else _expand_prefixed(t, prefixes))
         toks = expanded
     if not toks:
         raise ValueError("empty query")

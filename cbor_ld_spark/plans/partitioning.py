@@ -50,6 +50,24 @@ def parquet_rows(path: str) -> int | None:
         return None
 
 
+def row_scaled(cap: int, rows: int | None, rows_per_part: int) -> int:
+    """``ceil(rows / rows_per_part)`` clamped to ``[1, cap]``; ``cap``
+    when the row count is unknown (the safe direction at scale).  The
+    one partition-sizing rule behind input spreading, the shared-tier
+    checkpoints and the streaming state stores."""
+    if rows is None:
+        return cap
+    return max(1, min(cap, -(-rows // rows_per_part)))
+
+
+def tier_partitions(spark, sf_dir: str) -> int:
+    """Checkpoint width for the shared tiers: ~1k source docs per
+    partition (each doc yields ~10 triples), clamped to the session
+    parallelism."""
+    return row_scaled(input_partitions(spark),
+                      parquet_rows(f"{sf_dir}/documents.parquet"), 1024)
+
+
 def spread_input(df: DataFrame, by: str | None = None,
                  rows: int | None = None,
                  rows_per_task: int = 256) -> DataFrame:
@@ -72,9 +90,8 @@ def spread_input(df: DataFrame, by: str | None = None,
     at bench scale; unbounded inputs spread to full width — the safe
     direction at scale.
     """
-    target = input_partitions(df.sparkSession)
-    if rows is not None:
-        target = max(1, min(target, -(-rows // rows_per_task)))
+    target = row_scaled(input_partitions(df.sparkSession), rows,
+                        rows_per_task)
     if by is not None:
         return df.repartition(target, F.col(by))
     return df.repartition(target)

@@ -1949,6 +1949,22 @@ def test_prefixed_names_in_filter_bodies_stay_unexpanded():
     assert s2["filters"] == ["o = ex:Thing"]
 
 
+def test_prefixed_names_in_aggregate_and_order_keys_stay_unexpanded():
+    """'(AGG AS ?v)' select items and ORDER BY '(expr)' / DESC(..) keys
+    are SQL expressions too: a declared prefixed name inside them stays
+    verbatim, while the pattern terms still expand."""
+    from cbor_ld_spark.operators.sparql import parse_sparql
+
+    s = parse_sparql('PREFIX ex: <urn:ex:> SELECT ?s '
+                     '(COUNT(ex:foo) AS ?n) WHERE { ?s ex:p ?o } '
+                     'GROUP BY ?s ORDER BY DESC(ex:bar) (ex:baz) ?s')
+    assert s["patterns"] == [("?s", "urn:ex:p", "?o")]
+    assert s["aggs"] == [("COUNT(ex:foo)", "n")]
+    assert s["order_by"] == [("ex:bar", "desc", "expr"),
+                             ("ex:baz", "asc", "expr"),
+                             ("s", "asc", "var")]
+
+
 def test_single_quoted_literal_with_paren_tokenizes():
     """r9 (ADVICE): the paren scanner treated only double quotes as
     opaque; a single-quoted SQL literal containing ')' mis-tokenized."""

@@ -142,3 +142,35 @@ def test_decode_non_finite_float():
     # registry 0 (verbatim) payload carrying Infinity
     data = dumps(CborTag(0x0600, CborMap([("x", float("inf"))])))
     assert _kind(lambda: decode_document(data)) == "NonFiniteFloat"
+
+
+def test_ok_includes_expansion(monkeypatch):
+    """``ok`` means the whole kernel pass succeeded, expansion included:
+    a document whose expansion raises is a typed error row, whatever
+    the third argument of ``_process_one`` and through the Arrow batch
+    fn.  (No mounted context reaches the raising expansion paths, so
+    expansion is patched.)"""
+    import os
+
+    import pyarrow as pa
+
+    import cbor_ld_spark.kernel.expand as expand
+    from cbor_ld_spark.functions.udfs import _process_one, kg_process_batches
+
+    def boom(doc):
+        raise CborLdError("InvalidIdMapValue", "patched")
+
+    monkeypatch.setattr(expand, "expand_to_triples", boom)
+    path = os.path.join(os.path.dirname(os.path.dirname(
+        os.path.abspath(__file__))), "cbor_ld_spark", "fixtures",
+        "samples", "truage.jsonld")
+    with open(path) as f:
+        content = f.read()
+    for flag in (True, False):
+        r = _process_one(content, 1, flag)
+        assert (r[1], r[3]) == (False, "InvalidIdMapValue"), r
+    batch = pa.RecordBatch.from_pydict(
+        {"content_sha": ["x"], "content": [content]})
+    [out] = list(kg_process_batches()(iter([batch])))
+    row = out.to_pylist()[0]
+    assert (row["ok"], row["error_kind"]) == (False, "InvalidIdMapValue")

@@ -183,7 +183,7 @@ def test_stateful_repo_stats_stream(spark):
         corpus = synthesize_corpus(spark, 80)
         corpus.write.parquet(inp)
         processed = process_corpus(stream_corpus(spark, inp),
-                                   dedup_content=False, emit_triples=True)
+                                   dedup_content=False)
         q = repo_stats_stream(processed, ckpt, out)
         q.awaitTermination(120)
 
@@ -446,3 +446,27 @@ def test_streaming_sessionize_out_of_order_across_batches(spark):
         assert got[9] == (0, 1, epoch + 3000, 0, 1000)
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def test_state_partitions_bounded_by_session(spark, monkeypatch):
+    """The session's shuffle parallelism is the upper bound on the
+    state-store count (the floor of 4 never exceeds it), and the sized
+    count lands on a new session, never on the caller's."""
+    from cbor_ld_spark.streaming.tuning import stream_state_partitions
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", raising=False)
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "2")
+    assert stream_state_partitions(caller, 10**6) <= 2
+    assert stream_state_partitions(caller, None) == 2
+    caller.conf.set("spark.sql.shuffle.partitions", "64")
+    assert stream_state_partitions(caller, 100) == 4
+    assert stream_state_partitions(caller, 10**5) == 10
+    # a runtime time zone is not inherited by newSession(); the stream's
+    # timestamp casts must still agree with the caller's
+    caller.conf.set("spark.sql.session.timeZone", "America/New_York")
+    from cbor_ld_spark.streaming.tuning import state_session
+    s = state_session(caller, 10**5)
+    assert s.conf.get("spark.sql.shuffle.partitions") == "10"
+    assert s.conf.get("spark.sql.session.timeZone") == "America/New_York"
+    assert caller.conf.get("spark.sql.shuffle.partitions") == "64"

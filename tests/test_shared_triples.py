@@ -42,16 +42,19 @@ def test_shared_triples_matches_direct_derivation(spark):
 
 def test_shared_triples_keyed_by_dir_and_clearable(spark):
     from cbor_ld_spark.plans import clear_shared_triples, shared_triples
-    from cbor_ld_spark.plans.shared import _TRIPLES_CACHE
+    from cbor_ld_spark.plans.shared import _MEMO
+
+    def n_triples():
+        return sum(1 for k in _MEMO if k[2] == "triples")
 
     clear_shared_triples()
     try:
         a = shared_triples(spark, "/root/testdata/sf0.001")
         b = shared_triples(spark, "/root/testdata/sf0.01")
         assert a is not b
-        assert len(_TRIPLES_CACHE) == 2
+        assert n_triples() == 2
         clear_shared_triples()
-        assert not _TRIPLES_CACHE
+        assert not n_triples()
         c = shared_triples(spark, "/root/testdata/sf0.001")
         assert c is not a  # fresh materialization after clear
     finally:
@@ -93,5 +96,27 @@ def test_shared_canonical_matches_direct(spark):
         assert shared.columns == direct.columns
         assert (sorted(map(tuple, shared.collect()))
                 == sorted(map(tuple, direct.collect())))
+    finally:
+        clear_shared_triples()
+
+
+def test_one_kernel_pass_per_session(spark):
+    """The doc-flag queries and the first triples consumer all read the
+    shared docs tier: built once, after which no executed plan re-runs
+    the Python kernel."""
+    import __spark_entry__ as E
+    from cbor_ld_spark.plans import clear_shared_triples
+
+    qs, sf_dir = E.queries(), E._oracle_sf_dir()
+    clear_shared_triples()
+    try:
+        for name in ("kg_doc_results", "kg_roundtrip_violations",
+                     "kg_compression_stats", "kg_triples_by_pred"):
+            df = qs[name](spark, sf_dir)
+            df.collect()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            assert "MapInArrow" not in plan, (name, plan)
+        from cbor_ld_spark.plans.shared import _MEMO
+        assert sorted(k[2] for k in _MEMO) == ["docs", "triples"]
     finally:
         clear_shared_triples()
